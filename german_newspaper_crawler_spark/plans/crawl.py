@@ -20,6 +20,7 @@ Stage map (reference → here):
 
 from __future__ import annotations
 
+import time
 from dataclasses import dataclass
 from datetime import datetime
 from functools import reduce
@@ -27,7 +28,7 @@ from operator import and_
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType, BinaryType, BooleanType, IntegerType, LongType, StringType,
@@ -171,7 +172,9 @@ def refill_from_anchors(
     sel = [F.col("content_hash").alias("h")]
     if scope_col:  # U2 strict mode: a hash only skips same-scope anchors
         sel.append(F.col(scope_col).alias("__scope"))
-    seen_h = seen.select(*sel).distinct()
+    # no distinct: a semi/anti join's result ignores duplicate build rows,
+    # and a distinct would add a shuffle + aggregate over all of seen
+    seen_h = seen.select(*sel)
     for hcol in ("url_hash", "text_hash"):
         cond = cand[hcol] == seen_h["h"]
         if scope_col:
@@ -498,7 +501,7 @@ def skip_known(
     sel = [F.col("content_hash").alias("h")]
     if scope_col:
         sel.append(F.col(scope_col).alias("__scope"))
-    seen_h = seen.select(*sel).distinct()
+    seen_h = seen.select(*sel)
 
     # Narrow-probe, join-back-once. The drop decision is a pure function of
     # the (content_hash, url_hash, text_content_hash[, scope]) tuple, so:
@@ -561,7 +564,7 @@ def prefilter_known_urls(
     sel = [F.col("content_hash").alias("h")]
     if scope_col:
         sel.append(F.col(scope_col).alias("__scope"))
-    seen_h = seen.select(*sel).distinct()
+    seen_h = seen.select(*sel)
     probe = batch.withColumn(
         "__uh", F.when(is_http, F.sha2(F.col("url"), 256))
     )
@@ -607,7 +610,7 @@ def skip_known_text(
     sel = [F.col("content_hash").alias("h")]
     if scope_col:
         sel.append(F.col(scope_col).alias("__scope"))
-    seen_h = seen.select(*sel).distinct()
+    seen_h = seen.select(*sel)
     cond = articles["text_content_hash"] == seen_h["h"]
     if scope_col:
         cond = cond & (articles[scope_col] == seen_h["__scope"])
@@ -615,6 +618,16 @@ def skip_known_text(
 
 
 # --- the driver loop -------------------------------------------------------------
+
+def _fetch_state(status: Column) -> Column:
+    """Frontier state a fetch status resolves a popped row to."""
+    return (
+        F.when(status == 200, F.lit("fetched"))
+        .when(status == -403, F.lit("blocked"))
+        .when(status == -304, F.lit("skipped"))
+        .otherwise(F.lit("failed"))
+    )
+
 
 def run_crawl(
     spark: SparkSession,
@@ -660,6 +673,7 @@ def run_crawl(
     if store.exists("articles"):
         id_highwater = store.read(spark, "articles").agg(F.max("_id")).first()[0] or 0
     for rnd in range(cfg.max_rounds):
+        t_round = time.perf_counter()
         frontier = store.read(spark, "frontier")
         authority = None
         if cfg.authority_priority:
@@ -686,7 +700,11 @@ def run_crawl(
             frontier, cfg.per_host_budget,
             authority=authority, round_budget=cfg.round_budget,
         ).cache()
-        if batch.isEmpty():
+        # every frame cached this round, unpersisted when the round ends
+        cached = [batch]
+        # one aggregate decides the empty round and which kind legs run
+        n_kind = {r["kind"]: r["count"] for r in batch.groupBy("kind").count().collect()}
+        if not n_kind:
             batch.unpersist()
             break
         seen = store.read(spark, "seen", schemas.SEEN)
@@ -707,7 +725,9 @@ def run_crawl(
                 now=cfg.parsed_ts or datetime.utcnow(),
                 ttl_hours=cfg.robots_ttl_hours,
             )
-            work = attach_robots(batch, rules)
+            # a left join keeps every batch row: work has the kinds n_kind saw
+            work = attach_robots(batch, rules).cache()
+            cached.append(work)
 
         new_frontier: list[DataFrame] = []
         status_parts: list[DataFrame] = []  # (url, status) for state updates
@@ -715,12 +735,12 @@ def run_crawl(
         round_ts = cfg.parsed_ts or datetime.utcnow()  # F10 injected clock
 
         # 1) listings → fused fetch+anchor-extract → frontier refill
-        listings = work.where(F.col("kind") == "listing")
-        if not listings.isEmpty():
+        if n_kind.get("listing"):
             anchors = fetch_parse_listings_stage(
-                listings, fetcher, robots=round_robots, respect_delay=cfg.respect_delay,
-                concurrency=cfg.fetch_concurrency,
+                work.where(F.col("kind") == "listing"), fetcher, robots=round_robots,
+                respect_delay=cfg.respect_delay, concurrency=cfg.fetch_concurrency,
             ).cache()
+            cached.append(anchors)
             status_parts.append(
                 anchors.where(F.col("sel_rank") == -1).select("page_url", "status")
                 .withColumnRenamed("page_url", "url")
@@ -737,11 +757,10 @@ def run_crawl(
         #    urls never reach the fetch stage (status -304, state
         #    "skipped"), and the post-fetch check is one linear anti-join —
         #    the fetched batch has a single consumer chain.
-        art_batch = work.where(F.col("kind") == "article")
-        if not art_batch.isEmpty():
+        if n_kind.get("article"):
             scope = "domain" if cfg.strict_refresh_replace else None
             art_fresh, art_skipped = prefilter_known_urls(
-                art_batch, seen, scope_col=scope
+                work.where(F.col("kind") == "article"), seen, scope_col=scope
             )
             parsed = article_identity(
                 fetch_parse_articles_stage(
@@ -749,6 +768,7 @@ def run_crawl(
                     concurrency=cfg.fetch_concurrency,
                 )
             ).cache()
+            cached.append(parsed)
             status_parts.append(parsed.select("url", "status"))
             status_parts.append(
                 art_skipped.select("url", F.lit(-304).alias("status"))
@@ -790,7 +810,7 @@ def run_crawl(
             sel2 = [F.col("content_hash").alias("h")] + (
                 [F.col("domain").alias("__scope")] if scope else []
             )
-            seen_h2 = seen.select(*sel2).distinct()
+            seen_h2 = seen.select(*sel2)
             cond2 = enriched.content_hash == seen_h2["h"]
             if scope:
                 cond2 = cond2 & (enriched.domain == seen_h2["__scope"])
@@ -813,6 +833,7 @@ def run_crawl(
                 "published_date", "parsed_date", "html_gz", "text",
                 "ai_keywords", "pos_taggs", "content_hash", "domain",
             ).cache()
+            cached.append(articles_out)
             n_articles = articles_out.count()
             id_highwater += n_articles
             if n_articles:
@@ -864,12 +885,12 @@ def run_crawl(
                 )
 
         # 4) images → fused fetch+decode+phash → exact-phash dedup → append
-        img_batch = work.where(F.col("kind") == "image")
-        if not img_batch.isEmpty():
+        if n_kind.get("image"):
             img_out = fetch_images_stage(
-                img_batch, fetcher, robots=round_robots, respect_delay=cfg.respect_delay,
-                concurrency=cfg.fetch_concurrency,
+                work.where(F.col("kind") == "image"), fetcher, robots=round_robots,
+                respect_delay=cfg.respect_delay, concurrency=cfg.fetch_concurrency,
             ).cache()
+            cached.append(img_out)
             status_parts.append(img_out.select("url", "status"))
             imgs = img_out.where(F.col("bytes").isNotNull()).select(
                 *[f.name for f in schemas.IMAGES.fields], "priority", "seq"
@@ -903,6 +924,8 @@ def run_crawl(
                     .withColumn("doc_pos", F.col("seq")),
                     url_col="phash",
                 ).select(*[f.name for f in schemas.IMAGES.fields])
+            imgs = imgs.cache()
+            cached.append(imgs)
             n_images = imgs.count()
             if n_images:
                 store.append("images", imgs)
@@ -919,22 +942,20 @@ def run_crawl(
         # rewrite — VERDICT r1 #2); refill rows are new URLs, appended after
         # anti-joining the current frontier, so the store's append contract
         # (no key collisions with live deltas) holds by construction.
-        n_fetched = 0
+        n_fetched = n_failed = 0
         if status_parts:
-            statuses = status_parts[0]
-            for s in status_parts[1:]:
-                statuses = statuses.unionByName(s)
-            n_fetched = statuses.count()
+            statuses = reduce(DataFrame.unionByName, status_parts).cache()
+            cached.append(statuses)
+            n_fetched, n_failed = statuses.agg(
+                F.count(F.lit(1)),
+                F.count(F.when(_fetch_state(F.col("status")) == "failed", 1)),
+            ).first()
             done = (
                 batch.drop("state")
                 .join(statuses, "url")
                 .select(
                     "url", "host", "bucket", "priority", "seq", "kind",
-                    F.when(F.col("status") == 200, F.lit("fetched"))
-                    .when(F.col("status") == -403, F.lit("blocked"))
-                    .when(F.col("status") == -304, F.lit("skipped"))
-                    .otherwise(F.lit("failed"))
-                    .alias("state"),
+                    _fetch_state(F.col("status")).alias("state"),
                     F.lit(rnd).alias("round"),
                     "domain", "base_url", "anchor_text",
                     F.current_timestamp().alias("discovered_at"),
@@ -962,7 +983,8 @@ def run_crawl(
             {
                 "run_id": run_id, "round": rnd, "stage": "round",
                 "n_fetched": n_fetched, "n_articles": n_articles,
-                "n_images": n_images,
+                "n_images": n_images, "n_failed": n_failed,
+                "wall_ms": round((time.perf_counter() - t_round) * 1000),
             }
         )
         # structured run log (logging.py analog): a few rows per round,
@@ -978,7 +1000,8 @@ def run_crawl(
         total_fetched += n_fetched
         total_articles += n_articles
         total_images += n_images
-        batch.unpersist()
+        for df in cached:
+            df.unpersist()
 
     # G7: persist per-round lineage/metrics (per-partition fetch_ms detail
     # lives in the FETCHED.fetch_ms column; this is the run-level rollup)
@@ -986,7 +1009,8 @@ def run_crawl(
         rows = [
             (
                 m["run_id"], m["round"], m["stage"], None, None,
-                m["n_fetched"], m["n_articles"] + m["n_images"], 0, None,
+                m["n_fetched"], m["n_articles"] + m["n_images"],
+                m["n_failed"], m["wall_ms"],
             )
             for m in metrics
         ]

@@ -13,8 +13,13 @@ Centralizes the configuration that matters at 100 TB scale:
 from __future__ import annotations
 
 import os
+import site
 
 from pyspark.sql import SparkSession
+
+# Python worker daemon that skips the per-task zip directory re-read
+# (see daemon.py)
+DAEMON_MODULE = "german_newspaper_crawler_spark.daemon"
 
 
 def _local_k(master: str, fallback: int) -> int:
@@ -79,6 +84,30 @@ def _pretouch_ok(heap: str) -> bool:
     except (OSError, ValueError, IndexError):
         pass
     return avail >= _heap_gib(heap) + 2.0
+
+
+def _daemon_importable() -> bool:
+    """Whether Spark's Python daemon can import :data:`DAEMON_MODULE`. The
+    JVM starts it as ``python -m`` in this process's working directory
+    with this process's PYTHONPATH, so the package must sit in a plain
+    directory on that path. A package shipped only with ``--py-files``
+    reaches the workers per task, after the daemon has started; those
+    sessions keep pyspark's own daemon."""
+    root = os.path.realpath(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    if not os.path.isdir(root):
+        return False
+    paths = os.environ.get("PYTHONPATH", "").split(os.pathsep) + site.getsitepackages()
+    if not os.environ.get("PYTHONSAFEPATH"):
+        paths.append(os.getcwd())
+    return any(p and os.path.realpath(p) == root for p in paths)
+
+
+def _use_package_daemon(master: str) -> bool:
+    """Only a local master runs its Python daemon on this host, in this
+    process's working directory; executors of a cluster master
+    (``spark://``, ``yarn``, ``local-cluster[...]``) may not have the
+    package on their path, so they keep pyspark's own daemon."""
+    return (master == "local" or master.startswith("local[")) and _daemon_importable()
 
 
 def get_spark(
@@ -165,6 +194,8 @@ def get_spark(
     if user_java:
         java_opts = f"{java_opts} {user_java}"
     builder = builder.config("spark.driver.extraJavaOptions", java_opts)
+    if _use_package_daemon(master):
+        builder = builder.config("spark.python.daemon.module", DAEMON_MODULE)
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

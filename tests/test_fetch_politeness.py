@@ -181,14 +181,23 @@ def test_split_skip_equals_skip_known(spark):
          (sha("ftp://h0/odd-2"),), (sha("https://h1/both-known"),)],
         ["content_hash"],
     )
+    # the seen probes join without a build-side distinct: a seen table
+    # holding every hash more than once must skip exactly the same rows
+    seen_dup = seen.unionAll(seen).unionAll(seen.limit(2))
 
-    want = {r["url"] for r in skip_known(arts, seen).collect()}
-    fresh_batch, skipped = prefilter_known_urls(arts, seen)
-    got = {r["url"] for r in skip_known_text(fresh_batch, seen).collect()}
-    assert got == want == {"https://h0/fresh-2", "ftp://h0/odd-2"}
-    assert {r["url"] for r in skipped.collect()} == {
-        "https://h0/known-url", "https://h1/both-known"
-    }
+    for s in (seen, seen_dup):
+        want = {r["url"] for r in skip_known(arts, s).collect()}
+        fresh_batch, skipped = prefilter_known_urls(arts, s)
+        fresh_rows = fresh_batch.collect()
+        got = {r["url"] for r in skip_known_text(fresh_batch, s).collect()}
+        assert got == want == {"https://h0/fresh-2", "ftp://h0/odd-2"}
+        skipped_urls = [r["url"] for r in skipped.collect()]
+        assert sorted(skipped_urls) == ["https://h0/known-url", "https://h1/both-known"]
+        # each batch row lands in exactly one of the two outputs, once
+        assert sorted([r["url"] for r in fresh_rows] + skipped_urls) == sorted(
+            r[0] for r in rows
+        )
+        assert fresh_batch.columns == arts.columns
 
 
 def test_prefetch_skip_never_fetches_known_urls(spark, tmp_path):

@@ -56,3 +56,44 @@ def test_crawl_emits_structured_log(spark, tmp_path):
     assert events[-1] == "run_complete"
     done = read_logs(spark, store).where("event = 'run_complete'").first()
     assert json.loads(done["payload"])["articles"] == stats["articles"]
+
+
+def test_crawl_metrics_rows_carry_wall_ms_and_failed_count(spark, tmp_path):
+    """Each round's ``metrics`` row has its driver wall time and, as
+    ``n_failed``, the number of popped rows that round resolved to state
+    'failed'. Exactly one fetch fails here: one article answers 500."""
+    from pyspark.sql import functions as F
+
+    from german_newspaper_crawler_spark.fixtures import make_fixtures
+    from german_newspaper_crawler_spark.plans.crawl import CrawlConfig, run_crawl
+    from german_newspaper_crawler_spark.sources.fetch import table_fetcher
+
+    seeds, pages, blobs, _ = make_fixtures(n_hosts=1, articles_per_host=3)
+    failing = "https://h0-zeitung0.example/artikel/a1"
+    ok = (200, "<html><body><p>Seite der die und.</p></body></html>")
+    pages = {u: ok if st != 200 else (st, html) for u, (st, html) in pages.items()}
+    pages[failing] = (500, "server error")
+    seeds_df = spark.createDataFrame(
+        [(s["domain"], s["base_url"], s["host"], s["collection"]) for s in seeds],
+        ["domain", "base_url", "host", "collection"],
+    )
+    store = SnapshotStore(str(tmp_path / "s"))
+    cfg = CrawlConfig(n_buckets=8, max_rounds=4, parsed_ts=datetime(2026, 1, 2),
+                      extract_images=False)
+    stats = run_crawl(spark, store, seeds_df, table_fetcher(pages, blobs), cfg=cfg)
+
+    front = store.read(spark, "frontier")
+    failed = {
+        r["round"]: r["n"]
+        for r in front.where(F.col("state") == "failed").groupBy("round")
+        .agg(F.count(F.lit(1)).alias("n")).collect()
+    }
+    assert failed == {1: 1}
+    assert front.where(F.col("state") == "failed").first()["url"] == failing
+
+    rows = store.read(spark, "metrics").orderBy("round").collect()
+    assert [r["round"] for r in rows] == list(range(stats["rounds"]))
+    for r in rows:
+        assert r["wall_ms"] is not None and r["wall_ms"] > 0
+        assert r["n_failed"] == failed.get(r["round"], 0)
+    assert [m["n_failed"] for m in stats["metrics"]] == [r["n_failed"] for r in rows]
