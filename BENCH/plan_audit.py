@@ -34,9 +34,9 @@ NOTES = {
         "PPJoin prefix-filtered inverted index (r6 rework): input widened "
         "when the scan is narrower than the shuffle parallelism, shingles "
         "hashed to 8-byte keys inside the tokenizer transform (no concat "
-        "allocation), per-doc arrays persisted once, df attached by "
-        "broadcasting only the df>=2 band, candidates only from "
-        "ascending-df prefix postings capped by max_df, and the size + "
+        "allocation), per-doc arrays materialized once (local "
+        "checkpoint), df attached by broadcasting only the df>=2 band, "
+        "candidates only from ascending-df prefix postings capped by max_df, and the size + "
         "positional filters AND the exact verify all run inside the "
         "emission lambda — only verified pairs become rows, so there is no "
         "candidate exchange, no verify join, and the final distinct sees "
@@ -89,8 +89,8 @@ NOTES = {
         "End-to-end curation (r6 rework): widened quality gate → exact-sig "
         "dedup as min(doc_id)-per-signature + AQE-broadcast semi-join (the "
         "text payload never shuffles; the former sig-window exchanged and "
-        "sorted every document body) → persisted keeper set feeds both the "
-        "shingle derivation and the keeper join → df-capped Jaccard edges "
+        "sorted every document body) → locally checkpointed keeper set "
+        "feeds both the shingle derivation and the keeper join → df-capped Jaccard edges "
         "via the PPJoin prefix path with in-emission verify (prefix ON "
         "since r6: at sf1.0 the plain inverted index emits 71M "
         "co-occurrence pairs for an empty edge set) → iterative min-label "

@@ -4,8 +4,7 @@
 NOT part of the driver contract — bench.py stays frozen. This harness:
 
 * times any registered query with the noop sink (`--query NAME [--reps N]`),
-* dumps `.explain("formatted")` for queries (`--explain NAME --out FILE`),
-* phase-profiles the n-gram Jaccard dedup internals (`--profile-ngram`).
+* dumps `.explain("formatted")` for queries (`--explain NAME --out FILE`).
 
 Usage: SPARK_GRAFT_SF_DIR=/root/testdata/sf1.0 python bench_extra.py --query dedup_ngram_jaccard
 """
@@ -60,8 +59,6 @@ def main():
     ap.add_argument("--explain", action="append", default=[])
     ap.add_argument("--out-dir", default="plans/r06")
     ap.add_argument("--suffix", default="")
-    ap.add_argument("--profile-ngram", action="store_true")
-    ap.add_argument("--profile-curation", action="store_true")
     args = ap.parse_args()
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -94,114 +91,7 @@ def main():
             spark.catalog.clearCache()
         print(f"{name}: min={min(reps):.3f} reps={[round(r, 3) for r in reps]}")
 
-    if args.profile_ngram:
-        profile_ngram(spark, sf_dir)
-    if args.profile_curation:
-        profile_curation(spark, sf_dir)
     spark.stop()
-
-
-def timed(spark, label, df_or_build, reps=2):
-    """Time a DataFrame or a zero-arg builder. Frames that persist
-    intermediates MUST come in as builders: clearCache() between reps drops
-    their caches, and re-forcing the same plan object then re-derives the
-    cached subtree (and can trip the InferFiltersFromGenerate re-inlining
-    documented in dedup._shingle_arrays)."""
-    build = df_or_build if callable(df_or_build) else (lambda: df_or_build)
-    walls = []
-    for i in range(max(reps, 1) + 1):
-        spark.sparkContext.setJobDescription(f"{label} rep{i}")
-        t0 = time.monotonic()
-        force(build())
-        dt = time.monotonic() - t0
-        if i > 0:
-            walls.append(dt)
-        spark.catalog.clearCache()
-    print(f"  {label}: min={min(walls):.3f} {[round(w, 3) for w in walls]}")
-    return min(walls)
-
-
-def profile_ngram(spark, sf_dir):
-    """Phase isolation for dedup_ngram_jaccard internals at this sf."""
-    from pyspark.sql import functions as F
-
-    from german_newspaper_crawler_spark.operators import dedup as D
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    print("== ngram jaccard phases ==")
-
-    # corpus shape
-    toks = F.split(F.trim(F.col("text")), r"\s+")
-    stats = docs.select(F.size(toks).alias("n")).agg(
-        F.count("*"), F.sum("n"), F.avg("n"), F.max("n")
-    ).collect()[0]
-    print(f"  docs={stats[0]} tokens total={stats[1]} avg={stats[2]:.1f} max={stats[3]}")
-
-    # phase 1: per-doc shingle arrays (the one persisted frame).
-    # NOTE: frames derived from arr0 must not outlive a clearCache() —
-    # exploding the UNCACHED array column trips InferFiltersFromGenerate
-    # into re-inlining the shingle expression (the 35x trap documented in
-    # _shingle_arrays) — so each phase below builds its own arr0.
-    timed(spark, "shingle arrays (widen+split+hash)",
-          D._shingle_arrays(docs, "doc_id", "text", 3))
-    arr0 = D._shingle_arrays(docs, "doc_id", "text", 3)
-    print(f"  shingle rows: {arr0.select(F.explode('sh_arr')).count()}")
-    arr0.unpersist()
-
-    # phase 2: df counts over the explode (fresh cache per rep)
-    def dfreq():
-        a = D._shingle_arrays(docs, "doc_id", "text", 3)
-        return a.select("doc_id", F.explode("sh_arr").alias("shingle")) \
-                .groupBy("shingle").agg(F.count("*").alias("__df"))
-    import time as _t
-    walls = []
-    for i in range(3):
-        t0 = _t.monotonic(); force(dfreq()); dt = _t.monotonic() - t0
-        spark.catalog.clearCache()
-        if i > 0:
-            walls.append(round(dt, 3))
-    print(f"  dfreq groupBy (incl. arrays): min={min(walls):.3f} {walls}")
-
-    # phase 3: full prefix-filter path (current impl)
-    timed(spark, "FULL prefix_filter=True", lambda: D.ngram_jaccard_pairs(
-        docs, "doc_id", "text", 3, 0.5, max_df=100, prefix_filter=True))
-
-    # phase 4: capped inverted index path
-    timed(spark, "FULL prefix_filter=False", lambda: D.ngram_jaccard_pairs(
-        docs, "doc_id", "text", 3, 0.5, max_df=100, prefix_filter=False))
-
-
-def profile_curation(spark, sf_dir):
-    from pyspark.sql import functions as F, Window
-    from pyspark import StorageLevel
-
-    from german_newspaper_crawler_spark.functions.text import token_count_estimate
-    from german_newspaper_crawler_spark.operators.components import dedup_keepers
-    from german_newspaper_crawler_spark.operators.dedup import ngram_jaccard_pairs
-
-    print("== curation phases ==")
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    quality = docs.where(token_count_estimate("text").between(10, 5000))
-    sig = F.sha2(F.concat_ws(" ", F.slice(F.split(F.trim("text"), r"\s+"), 1, 3)), 256)
-    w = Window.partitionBy(sig).orderBy("doc_id")
-    exact_keep = (
-        quality.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1).drop("__rn")
-    )
-    timed(spark, "exact_keep (window)", exact_keep)
-    ek = exact_keep.persist(StorageLevel.MEMORY_AND_DISK)
-    ek.count()
-    edges = ngram_jaccard_pairs(ek, "doc_id", "text", n=3, threshold=0.5,
-                                max_df=100, prefix_filter=False)
-    n_edges = edges.count()
-    print(f"  edges: {n_edges}")
-    t0 = time.monotonic()
-    curated = dedup_keepers(ek.select("doc_id", "source"), "doc_id", edges).where(
-        F.col("is_keeper"))
-    out = curated.groupBy("source").agg(F.count("*").alias("n"))
-    force(out)
-    print(f"  components+rollup (edges warm-ish): {time.monotonic() - t0:.3f}")
-    ek.unpersist()
 
 
 if __name__ == "__main__":

@@ -102,13 +102,6 @@ def build_bloom(
     return src.groupBy("bucket").applyInPandas(build, schema=BLOOM_SCHEMA)
 
 
-def merge_blooms(a: bytes, b: bytes) -> bytes:
-    """OR-merge two blobs (associative/commutative — incremental builds)."""
-    return (
-        np.frombuffer(a, np.uint8) | np.frombuffer(b, np.uint8)
-    ).tobytes()
-
-
 def merge_bloom_tables(blooms: DataFrame) -> DataFrame:
     """Collapse multiple blob generations per bucket into one (OR)."""
 

@@ -15,62 +15,31 @@ rules at scale:
 
 from __future__ import annotations
 
-import weakref
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from german_newspaper_crawler_spark.functions.hashing import hash64
 
 
-def _release_cache_with(result: DataFrame, cached: DataFrame) -> DataFrame:
-    """Unpersist ``cached`` (non-blocking) when ``result`` is garbage
-    collected — library callers that persist intermediates through us get
-    automatic release without holding a handle; the cache lives exactly as
-    long as the derived plan object that reads it.
-
-    CONTRACT (ADVICE-r4): the finalizer fires when THIS Python wrapper
-    dies, not when the underlying plan does. A caller that derives further
-    frames from ``result`` and drops the handle before running an action
-    releases the cache too early — such callers must re-tie the release to
-    the outermost frame they actually hold through the action via
-    :func:`carry_cache_release`."""
-
-    def _release(c=cached):
-        try:
-            c.unpersist(False)
-        except Exception:
-            pass  # session already stopped — nothing left to free
-
-    fin = weakref.finalize(result, _release)
-    # keep handles discoverable so carry_cache_release can re-tie them
-    result._gncs_cache_finalizers = (
-        getattr(result, "_gncs_cache_finalizers", []) + [fin]
-    )
-    return result
+# analyzed-plan nodes that make a lineage more than a projected/filtered scan
+_NON_SCAN_NODES = frozenset({
+    "Aggregate", "Distinct", "Deduplicate", "Join", "Window", "Repartition",
+    "RepartitionByExpression", "RebalancePartitions", "Sort", "Generate",
+    "Union", "Intersect", "Except",
+})
 
 
-def carry_cache_release(result: DataFrame, *sources: DataFrame) -> DataFrame:
-    """Move cache-release finalizers from intermediate frames onto the
-    outermost frame the caller holds through the action. Use when deriving
-    downstream frames from an operator result that carries a
-    :func:`_release_cache_with` finalizer (e.g. ``ngram_jaccard_pairs``
-    with ``max_df``) — without this the intermediate wrapper dies at scope
-    exit and the persist is silently released before the first action."""
-    moved = []
-    for s in sources:
-        for fin in getattr(s, "_gncs_cache_finalizers", []):
-            detached = fin.detach()  # None if already fired
-            if detached is None:
-                continue
-            _obj, func, args, kwargs = detached
-            moved.append(weakref.finalize(result, func, *args, **kwargs))
-        if getattr(s, "_gncs_cache_finalizers", None):
-            s._gncs_cache_finalizers = []
-    result._gncs_cache_finalizers = (
-        getattr(result, "_gncs_cache_finalizers", []) + moved
-    )
-    return result
+def _plan_node_names(plan) -> set[str]:
+    """Class names of every node in a JVM logical plan (expressions and
+    column names are not nodes, so a column called ``Joined`` is not a
+    Join)."""
+    names, stack = set(), [plan]
+    while stack:
+        node = stack.pop()
+        names.add(node.nodeName())
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return names
 
 
 def widen_if_narrow(df: DataFrame) -> DataFrame:
@@ -84,36 +53,20 @@ def widen_if_narrow(df: DataFrame) -> DataFrame:
     scan is already at least as wide as ``spark.sql.shuffle.partitions`` —
     i.e. always at cluster scale — so the extra exchange exists exactly when
     it buys parallelism."""
-    spark = df.sparkSession
-    try:
-        # only probe scan-shaped lineages (project/filter over a relation):
-        # anything that already passed a shuffle (aggregate/join/window/
-        # repartition) or a cache is as wide as the session's shuffle
-        # parallelism, and calling .rdd on such an adaptive plan would
-        # eagerly materialize its query stages at plan-build time
-        plan = df._jdf.queryExecution().analyzed().toString()
-        if any(
-            k in plan
-            for k in (
-                "Aggregate", "Join", "Window", "Repartition", "Sort",
-                "InMemoryRelation", "Generate", "Union",
-            )
-        ):
-            return df
-        p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        if df.rdd.getNumPartitions() < p:
-            return df.repartition(p)
-    except Exception:
-        pass
+    # a streaming frame has no partitions to count (.rdd raises)
+    if df.isStreaming:
+        return df
+    # only probe scan-shaped lineages (project/filter over a relation):
+    # anything that already passed a shuffle (aggregate/join/window/
+    # repartition...) is as wide as the session's shuffle parallelism, and
+    # calling .rdd on such an adaptive plan would eagerly materialize its
+    # query stages at plan-build time
+    if _plan_node_names(df._jdf.queryExecution().analyzed()) & _NON_SCAN_NODES:
+        return df
+    p = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    if df.rdd.getNumPartitions() < p:
+        return df.repartition(p)
     return df
-
-
-def exact_dedup(df: DataFrame, id_col: str, sig_col) -> DataFrame:
-    """Exact dedup: keep min-id row per signature (reference identity as a
-    groupBy; the crawl path uses the anti-join form instead)."""
-    return df.groupBy(sig_col.alias("sig")).agg(
-        F.min(id_col).alias("keeper"), F.count("*").alias("n_dups")
-    )
 
 
 def word_shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
@@ -276,8 +229,9 @@ def _attach_df(arr0: DataFrame, id_col: str) -> DataFrame:
     real corpora, so AQE converts the join to a broadcast hash join at
     runtime and the full explode never shuffles for the attach; when the
     band is genuinely large the same plan degrades to a sort-merge join.
-    ``arr0`` is persisted by the caller — the explode feeding the df count
-    and the probe side reads the cache twice instead of re-splitting text.
+    ``arr0`` is a local checkpoint (:func:`_shingle_arrays`), so the
+    explode feeding the df count and the probe side reads the materialized
+    arrays twice instead of re-splitting text.
     """
     sh = arr0.select(id_col, F.explode("sh_arr").alias("shingle"))
     dfreq2 = (
@@ -288,6 +242,23 @@ def _attach_df(arr0: DataFrame, id_col: str) -> DataFrame:
     return sh.join(dfreq2, "shingle", "left").select(
         id_col, "shingle", F.coalesce("__df", F.lit(1)).alias("__df")
     )
+
+
+def _inverted_index(sh: DataFrame, id_col: str):
+    """Uncapped inverted-index core over (id, shingle) rows: (common, sizes)
+    with ``common`` = (a, b, c=|A∩B|) from the classic shingle self-join —
+    per-group memory stays O(1) even for degenerate mega-postings (but set
+    max_df at scale, see :func:`_capped_inverted_index`)."""
+    sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
+    a = sh.select(F.col(id_col).alias("a"), "shingle")
+    b = sh.select(F.col(id_col).alias("b"), "shingle")
+    common = (
+        a.join(b, "shingle")
+        .where(F.col("a") < F.col("b"))
+        .groupBy("a", "b")
+        .agg(F.count("*").alias("c"))
+    )
+    return common, sizes
 
 
 def _capped_inverted_index(arr0: DataFrame, id_col: str, max_df: int):
@@ -521,16 +492,17 @@ def _shingle_arrays(
 
     The input is widened first (:func:`widen_if_narrow`) so the regex split
     and the per-token hashing — the dominant narrow cost — parallelize even
-    over a single-file scan. Persisted as arrays (strictly smaller than the
-    exploded rows) because the downstream df count and df attach both
-    explode it; public callers tie the cache's release to their result
-    DataFrame via :func:`_release_cache_with`, so no block leaks past the
-    result's lifetime. NOTE: the persist also keeps the optimizer from
-    inlining the shingle expression into filters inferred above a later
-    explode of ``sh_arr`` (InferFiltersFromGenerate re-evaluates a non-cheap
-    generator child per row otherwise — measured 35x on the sf1.0 corpus)."""
-    from pyspark import StorageLevel
-
+    over a single-file scan. Materialized as arrays (strictly smaller than
+    the exploded rows) with an eager ``localCheckpoint``, because the
+    downstream df count and df attach both explode it: the arrays are
+    evaluated once, eagerly, when the frame is built, and Spark's
+    ContextCleaner frees the checkpoint's blocks once no plan references
+    them — there is no handle to release. The
+    checkpoint is a plan leaf (``LogicalRDD``), which also keeps the
+    optimizer from inlining the shingle expression into filters inferred
+    above a later explode of ``sh_arr`` (InferFiltersFromGenerate
+    re-evaluates a non-cheap generator child per row otherwise — measured
+    35x on the sf1.0 corpus)."""
     toks = F.split(F.trim(F.col(text_col)), r"\s+")
     df2 = (
         widen_if_narrow(df.select(F.col(id_col), F.col(text_col)))
@@ -541,15 +513,14 @@ def _shingle_arrays(
     shingles = F.expr(
         f"transform(sequence(1, size(tk) - {n - 1}), i -> xxhash64({args}))"
     )
-    return (
-        df2.select(id_col, F.array_distinct(shingles).alias("sh_arr"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    return df2.select(
+        id_col, F.array_distinct(shingles).alias("sh_arr")
+    ).localCheckpoint()
 
 
 def ngram_jaccard_pairs(
     df: DataFrame, id_col: str, text_col: str, n: int = 3, threshold: float = 0.5,
-    max_df: int | None = None, prefix_filter: bool = True,
+    max_df: int | None = None,
 ) -> DataFrame:
     """Near-dup pairs by n-gram Jaccard via inverted-index self-join.
 
@@ -563,45 +534,13 @@ def ngram_jaccard_pairs(
     both the intersection and the per-doc sizes (Jaccard over informative
     shingles — the standard near-dup practice); high-df shingles carry no
     near-dup signal anyway. At 10^8 docs, max_df ≈ max(1000, 0.001% of N).
-
-    ``prefix_filter`` (default on, requires max_df) additionally prunes
-    candidates PPJoin-style before the exact verify — identical output,
-    see :func:`_prefix_filtered_pairs`.
+    With ``max_df`` the candidates are also pruned PPJoin-style before the
+    exact verify — see :func:`_prefix_filtered_pairs`.
     """
     if max_df is not None:
         arr0 = _shingle_arrays(df, id_col, text_col, n)
-        if prefix_filter:
-            return _release_cache_with(
-                _prefix_filtered_pairs(arr0, id_col, max_df, threshold), arr0
-            )
-        common, sizes = _capped_inverted_index(arr0, id_col, max_df)
-        sa = sizes.select(F.col(id_col).alias("a"), F.col("n_sh").alias("na"))
-        sb = sizes.select(F.col(id_col).alias("b"), F.col("n_sh").alias("nb"))
-        jac = F.round(
-            F.col("c").cast("double")
-            / (F.col("na") + F.col("nb") - F.col("c")).cast("double"),
-            6,
-        )
-        return _release_cache_with(
-            common.join(sa, "a")
-            .join(sb, "b")
-            .withColumn("jaccard", jac)
-            .where(F.col("jaccard") >= threshold)
-            .select("a", "b", "jaccard"),
-            arr0,
-        )
-    sh = word_shingles(df, id_col, text_col, n)
-    # uncapped path: classic inverted-index self-join — per-group memory
-    # stays O(1) even for degenerate mega-postings (but set max_df at scale)
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
-    a = sh.select(F.col(id_col).alias("a"), "shingle")
-    b = sh.select(F.col(id_col).alias("b"), "shingle")
-    common = (
-        a.join(b, "shingle")
-        .where(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("c"))
-    )
+        return _prefix_filtered_pairs(arr0, id_col, max_df, threshold)
+    common, sizes = _inverted_index(word_shingles(df, id_col, text_col, n), id_col)
     sa = sizes.select(F.col(id_col).alias("a"), F.col("n_sh").alias("na"))
     sb = sizes.select(F.col(id_col).alias("b"), F.col("n_sh").alias("nb"))
     jac = F.round(
@@ -712,21 +651,11 @@ def containment_pairs(
     ``max_df`` stop-shingle cap); never pair enumeration. Output:
     (inner, outer, containment[6dp]).
     """
-    cached_sh = None
     if max_df is not None:
-        cached_sh = _shingle_arrays(df, id_col, text_col, n)
-        common, sizes = _capped_inverted_index(cached_sh, id_col, max_df)
+        arr0 = _shingle_arrays(df, id_col, text_col, n)
+        common, sizes = _capped_inverted_index(arr0, id_col, max_df)
     else:
-        sh = word_shingles(df, id_col, text_col, n)
-        sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
-        a = sh.select(F.col(id_col).alias("a"), "shingle")
-        b = sh.select(F.col(id_col).alias("b"), "shingle")
-        common = (
-            a.join(b, "shingle")
-            .where(F.col("a") < F.col("b"))
-            .groupBy("a", "b")
-            .agg(F.count("*").alias("c"))
-        )
+        common, sizes = _inverted_index(word_shingles(df, id_col, text_col, n), id_col)
     sa = sizes.select(F.col(id_col).alias("a"), F.col("n_sh").alias("na"))
     sb = sizes.select(F.col(id_col).alias("b"), F.col("n_sh").alias("nb"))
     both = common.join(sa, "a").join(sb, "b")
@@ -738,8 +667,7 @@ def containment_pairs(
         F.col("b").alias("inner"), F.col("a").alias("outer"),
         F.round(F.col("c") / F.col("nb"), 6).alias("containment"),
     )
-    out = a_in_b.unionByName(b_in_a).where(F.col("containment") >= threshold)
-    return out if cached_sh is None else _release_cache_with(out, cached_sh)
+    return a_in_b.unionByName(b_in_a).where(F.col("containment") >= threshold)
 
 
 def remove_repeated_spans(

@@ -99,7 +99,6 @@ def tfidf_top_terms(
     text_col: str,
     k: int = 5,
     min_df: int = 1,
-    cache_tf: bool = True,
 ) -> DataFrame:
     """(id, term, tfidf[6dp], rk) — the top-``k`` TF-IDF keywords of every
     document (smooth sklearn-style weighting ``(1 + ln(tf)) * (ln((N+1) /
@@ -123,12 +122,13 @@ def tfidf_top_terms(
     harmless for the join since df is a 1-row-per-term aggregate), while
     the hapax tail dominates cardinality; min_df prunes it early.
 
-    ``cache_tf`` persists the (doc, term, tf) frame: both the df branch
-    and the scoring join read it, and Catalyst prunes their columns
-    differently so the exchange is NOT reused — without the cache the
-    tokenize+explode shuffle runs twice. Release is GC-tied (the dedup.py
-    shingle-cache contract): callers deriving further frames must
-    ``carry_cache_release`` the result."""
+    The (doc, term, tf) frame is materialized with an eager
+    ``localCheckpoint``: both the df branch and the scoring join read it,
+    and Catalyst prunes their columns differently so the exchange is NOT
+    reused — unmaterialized, the tokenize+explode shuffle runs twice. So
+    tf is evaluated once, eagerly, when the result is built, and Spark's
+    ContextCleaner frees the checkpoint's blocks once no plan references
+    them."""
     if k < 1:
         raise ValueError("tfidf_top_terms requires k >= 1")
     from pyspark.sql import Window
@@ -145,9 +145,8 @@ def tfidf_top_terms(
         .where(F.length("term") >= 1)
         .groupBy("id", "term")
         .agg(F.count("*").cast("long").alias("tf"))
+        .localCheckpoint()
     )
-    if cache_tf:
-        tf = tf.persist()
     dfreq = (
         tf.groupBy("term")
         .agg(F.count("*").cast("long").alias("df"))
@@ -161,7 +160,7 @@ def tfidf_top_terms(
     win = Window.partitionBy("id").orderBy(
         F.col("tfidf").desc(), F.col("term").asc()
     )
-    out = (
+    return (
         tf.join(dfreq, "term")
         .crossJoin(F.broadcast(scalars))
         .withColumn("tfidf", tfidf)
@@ -169,10 +168,3 @@ def tfidf_top_terms(
         .where(F.col("rk") <= int(k))
         .select(F.col("id").alias(id_col), "term", "tfidf", "rk")
     )
-    if cache_tf:
-        from german_newspaper_crawler_spark.operators.dedup import (
-            _release_cache_with,
-        )
-
-        out = _release_cache_with(out, tf)
-    return out

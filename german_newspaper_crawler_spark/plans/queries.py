@@ -742,17 +742,6 @@ def dedup_exact(spark, sf_dir):
     )
 
 
-def _shingle_cols():
-    """3-word shingles as a JVM-side transform (no UDF)."""
-    toks = F.split(F.trim("text"), r"\s+")
-    return F.array_distinct(
-        F.expr(
-            "transform(sequence(1, size(tk) - 2), "
-            "i -> concat(element_at(tk, i), ' ', element_at(tk, i + 1), ' ', element_at(tk, i + 2)))"
-        )
-    ), toks
-
-
 _SHINGLE_SQL = """
     toks AS (
       SELECT doc_id, regexp_split_to_array(TRIM(text), '\\s+') AS tk FROM documents
@@ -1576,18 +1565,13 @@ def g5_image_decode_phash(spark, sf_dir):
 )
 def dedup_components_keepers(spark, sf_dir):
     from german_newspaper_crawler_spark.operators.components import dedup_keepers
-    from german_newspaper_crawler_spark.operators.dedup import (
-        carry_cache_release, ngram_jaccard_pairs,
-    )
+    from german_newspaper_crawler_spark.operators.dedup import ngram_jaccard_pairs
 
     docs = t(spark, sf_dir, "documents")
     edges = ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.5, max_df=100)
-    out = dedup_keepers(docs.select("doc_id"), "doc_id", edges).select(
+    return dedup_keepers(docs.select("doc_id"), "doc_id", edges).select(
         "doc_id", F.col("component").cast("long").alias("component"), "is_keeper"
     )
-    # edges' shingle-cache finalizer must outlive the action on OUT, not
-    # the edges wrapper (which dies at return) — re-tie it (ADVICE-r4)
-    return carry_cache_release(out, edges)
 
 @register(
     "f5x_canonicalize_url",
@@ -1930,24 +1914,19 @@ def text_winnowing_fingerprints(spark, sf_dir):
     bench=True,
 )
 def curation_pipeline(spark, sf_dir):
-    from pyspark import StorageLevel
-
     from german_newspaper_crawler_spark.functions.text import token_count_estimate
     from german_newspaper_crawler_spark.operators.components import dedup_keepers
     from german_newspaper_crawler_spark.operators.dedup import (
-        _release_cache_with, carry_cache_release, ngram_jaccard_pairs,
-        widen_if_narrow,
+        ngram_jaccard_pairs, widen_if_narrow,
     )
 
     # widened first: the quality gate + signature sha256 are narrow per-row
     # work serialized by the single-file scan otherwise (guide §2.5).
-    # quality feeds TWO branches (keeper-id aggregation + the semi-join
-    # probe) — persisted so the scan + token-count filter run once
-    # (measured ~0.7 s at sf1.0), released with the result frame
+    # quality feeds two branches (keeper-id aggregation + the semi-join
+    # probe) and is not materialized: each branch scans it once, while
+    # exact_keep is checkpointed below
     docs = widen_if_narrow(t(spark, sf_dir, "documents").select("doc_id", "source", "text"))
-    quality = docs.where(token_count_estimate("text").between(10, 5000)).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    quality = docs.where(token_count_estimate("text").between(10, 5000))
     sig = F.sha2(F.concat_ws(" ", F.slice(F.split(F.trim("text"), r"\s+"), 1, 3)), 256)
     # first-row-per-signature via min(doc_id) per sig + semi-join back:
     # only (sig, doc_id) pairs shuffle (hash agg with map-side partial
@@ -1962,34 +1941,19 @@ def curation_pipeline(spark, sf_dir):
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id")
     )
-    exact_keep = (
-        quality.join(keep_ids, "doc_id", "left_semi")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    # prefix_filter=True: at driver-bench scale (sf1.0) the exact-deduped
-    # corpus still carries a dense 2..100-df shingle band (71M raw
-    # co-occurrence pairs on the full corpus); the PPJoin prefix +
-    # size/positional filters + in-emission verify prune most of that for
-    # a tiny edge set (measured on this deduped input at sf1.0, same
-    # session: prefix 3.3-5.6s vs inverted index 5.7-6.9s; identical
-    # output — asserted by
-    # test_prefix_filter_pairs_identical_to_plain_inverted_index)
+    # exact_keep feeds the shingle arrays and the keeper labels: an eager
+    # local checkpoint evaluates it once, and Spark's ContextCleaner frees
+    # its blocks when no plan references them
+    exact_keep = quality.join(keep_ids, "doc_id", "left_semi").localCheckpoint()
     edges = ngram_jaccard_pairs(
         exact_keep, "doc_id", "text", n=3, threshold=0.5, max_df=100,
-        prefix_filter=True,
     )
     curated = dedup_keepers(
         exact_keep.select("doc_id", "source"), "doc_id", edges
     ).where(F.col("is_keeper"))
-    out = curated.groupBy("source").agg(
+    return curated.groupBy("source").agg(
         F.count("*").cast("long").alias("n_curated")
     )
-    # re-tie edges' shingle-cache release to OUT (the frame the caller
-    # holds through the action); the edges wrapper dies at return and
-    # would otherwise unpersist the shingle cache before it is ever read
-    # (ADVICE-r4)
-    out = _release_cache_with(carry_cache_release(out, edges), exact_keep)
-    return _release_cache_with(out, quality)
 
 
 # ---------------------------------------------------------------------------

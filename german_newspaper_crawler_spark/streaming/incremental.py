@@ -80,6 +80,16 @@ def run_available_now(stream_df: DataFrame, checkpoint: str, out_dir: str) -> No
     q.awaitTermination()
 
 
+def _foreach_batch_available_now(docs: DataFrame, process, checkpoint: str):
+    """The ``writeStream`` of every ``foreachBatch`` twin below: ``process``
+    per microbatch, checkpointed, run until caught up (``.start()`` it)."""
+    return (
+        docs.writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+    )
+
+
 SESSION_OUT = "user_id bigint, event_id bigint, session_id bigint"
 SESSION_STATE = "last_ts double, session_id bigint"
 
@@ -316,11 +326,7 @@ def streaming_paragraph_dedup(
     paragraphs as "seen".
     """
     process = paragraph_dedup_batch(store, id_col, paras_col, out_table, seen_table)
-    return (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-    )
+    return _foreach_batch_available_now(docs, process, checkpoint)
 
 
 def paragraph_dedup_batch(
@@ -419,11 +425,7 @@ def streaming_substring_dedup(
     replay fence as :func:`streaming_paragraph_dedup`.
     """
     process = substring_dedup_batch(store, id_col, text_col, k, out_table, seen_table)
-    return (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-    )
+    return _foreach_batch_available_now(docs, process, checkpoint)
 
 
 def substring_dedup_batch(
@@ -541,11 +543,7 @@ def streaming_hll_distinct(
     state grows forever.
     """
     process = hll_batch(store, key_col, group_col, p, regs_table)
-    return (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-    )
+    return _foreach_batch_available_now(docs, process, checkpoint)
 
 
 def hll_batch(
@@ -637,11 +635,7 @@ def streaming_countmin(
     answer where exact per-key state grows forever).
     """
     process = countmin_batch(store, key_col, d, w, cells_table)
-    return (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-    )
+    return _foreach_batch_available_now(docs, process, checkpoint)
 
 
 def _cm_cell_exprs(key_col: str, d: int, w: int):
@@ -658,6 +652,49 @@ def _cm_cell_exprs(key_col: str, d: int, w: int):
     return rows, cell_of
 
 
+def _fenced_sum_batch(
+    store, table: str, keys: list[str], count_col: str, cells
+):
+    """Per-microbatch fenced SUM-merge of the row counts per ``keys`` of
+    ``cells(batch_df)`` into ``table`` (*keys, count_col, last_batch): the
+    fold behind the Count-Min and histogram twins. Every cell carries the
+    ``last_batch`` high-water of the batches added to it, and a batch adds
+    its increment only where its id is beyond that mark — a replayed batch
+    adds nothing. Counts and fence commit as ONE snapshot overwrite."""
+
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        bc = (
+            cells(batch_df)
+            .groupBy(*keys)
+            .agg(F.count("*").cast("long").alias("bn"))
+        )
+        if store.exists(table):
+            prior = store.read(batch_df.sparkSession, table)
+            merged = prior.join(bc, keys, "full_outer").select(
+                *keys,
+                (
+                    F.coalesce(count_col, F.lit(0))
+                    + F.when(
+                        F.lit(batch_id) > F.coalesce("last_batch", F.lit(-1)),
+                        F.coalesce("bn", F.lit(0)),
+                    ).otherwise(F.lit(0))
+                ).cast("long").alias(count_col),
+                F.greatest(
+                    F.coalesce("last_batch", F.lit(-1)),
+                    F.lit(batch_id).cast("long"),
+                ).alias("last_batch"),
+            )
+        else:
+            merged = bc.select(
+                *keys,
+                F.col("bn").alias(count_col),
+                F.lit(batch_id).cast("long").alias("last_batch"),
+            )
+        store.overwrite(table, merged)
+
+    return process
+
+
 def countmin_batch(
     store,
     key_col: str,
@@ -669,44 +706,14 @@ def countmin_batch(
     exposed for direct replay testing and non-streaming incremental runs."""
     rows, cell_of = _cm_cell_exprs(key_col, d, w)
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        bc = (
+    def cells(batch_df: DataFrame) -> DataFrame:
+        return (
             batch_df.where(F.col(key_col).isNotNull())
             .select(F.col(key_col).alias("k"), rows)
             .withColumn("c", cell_of)
-            .groupBy("r", "c")
-            .agg(F.count("*").cast("long").alias("bn"))
         )
-        if store.exists(cells_table):
-            prior = store.read(spark, cells_table)
-            # per-cell fence: add the batch's increment only where this
-            # batch id is beyond the cell's high-water (replay: it is not)
-            merged = prior.join(bc, ["r", "c"], "full_outer").select(
-                "r",
-                "c",
-                (
-                    F.coalesce("n", F.lit(0))
-                    + F.when(
-                        F.lit(batch_id) > F.coalesce("last_batch", F.lit(-1)),
-                        F.coalesce("bn", F.lit(0)),
-                    ).otherwise(F.lit(0))
-                ).cast("long").alias("n"),
-                F.greatest(
-                    F.coalesce("last_batch", F.lit(-1)),
-                    F.lit(batch_id).cast("long"),
-                ).alias("last_batch"),
-            )
-        else:
-            merged = bc.select(
-                "r",
-                "c",
-                F.col("bn").alias("n"),
-                F.lit(batch_id).cast("long").alias("last_batch"),
-            )
-        store.overwrite(cells_table, merged)
 
-    return process
+    return _fenced_sum_batch(store, cells_table, ["r", "c"], "n", cells)
 
 
 def countmin_stream_estimate(
@@ -761,11 +768,7 @@ def streaming_quantile_hist(
     process = quantile_hist_batch(
         store, value_col, group_col, lo, hi, n_bins, bins_table
     )
-    return (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-    )
+    return _foreach_batch_available_now(docs, process, checkpoint)
 
 
 def quantile_hist_batch(
@@ -779,46 +782,17 @@ def quantile_hist_batch(
 ):
     """Per-microbatch bin-count fold behind :func:`streaming_quantile_hist`
     — exposed for direct replay testing and non-streaming incremental
-    runs. Same fence/merge shape as :func:`countmin_batch`."""
+    runs. The same fenced fold as :func:`countmin_batch`."""
     from german_newspaper_crawler_spark.operators.sketches import _qh_bin_expr
 
     idx = _qh_bin_expr(value_col, lo, hi, n_bins)
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        bc = (
-            batch_df.where(F.col(value_col).isNotNull())
-            .select(F.col(group_col).alias("g"), idx.alias("b"))
-            .groupBy("g", "b")
-            .agg(F.count("*").cast("long").alias("bn"))
+    def cells(batch_df: DataFrame) -> DataFrame:
+        return batch_df.where(F.col(value_col).isNotNull()).select(
+            F.col(group_col).alias("g"), idx.alias("b")
         )
-        if store.exists(bins_table):
-            prior = store.read(spark, bins_table)
-            merged = prior.join(bc, ["g", "b"], "full_outer").select(
-                "g",
-                "b",
-                (
-                    F.coalesce("cnt", F.lit(0))
-                    + F.when(
-                        F.lit(batch_id) > F.coalesce("last_batch", F.lit(-1)),
-                        F.coalesce("bn", F.lit(0)),
-                    ).otherwise(F.lit(0))
-                ).cast("long").alias("cnt"),
-                F.greatest(
-                    F.coalesce("last_batch", F.lit(-1)),
-                    F.lit(batch_id).cast("long"),
-                ).alias("last_batch"),
-            )
-        else:
-            merged = bc.select(
-                "g",
-                "b",
-                F.col("bn").alias("cnt"),
-                F.lit(batch_id).cast("long").alias("last_batch"),
-            )
-        store.overwrite(bins_table, merged)
 
-    return process
+    return _fenced_sum_batch(store, bins_table, ["g", "b"], "cnt", cells)
 
 
 def quantile_hist_stream_estimate(

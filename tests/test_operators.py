@@ -244,7 +244,7 @@ def test_prefix_filter_pairs_identical_to_plain_inverted_index(spark):
     import random
 
     from german_newspaper_crawler_spark.operators.dedup import (
-        ngram_jaccard_pairs,
+        _capped_inverted_index, _shingle_arrays, ngram_jaccard_pairs,
     )
 
     rng = random.Random(7)
@@ -268,19 +268,27 @@ def test_prefix_filter_pairs_identical_to_plain_inverted_index(spark):
         rows.append((did, " ".join(rng.choice(vocab) for _ in range(20)))); did += 1
     df = spark.createDataFrame(rows, ["doc_id", "text"])
 
+    # the plain reference: every pair of the capped inverted index, with
+    # the exact jaccard over the per-doc capped sizes
+    common, sizes = _capped_inverted_index(
+        _shingle_arrays(df, "doc_id", "text", 3), "doc_id", 100
+    )
+    sa = sizes.select(F.col("doc_id").alias("a"), F.col("n_sh").alias("na"))
+    sb = sizes.select(F.col("doc_id").alias("b"), F.col("n_sh").alias("nb"))
+    jac = F.round(
+        F.col("c").cast("double")
+        / (F.col("na") + F.col("nb") - F.col("c")).cast("double"),
+        6,
+    )
+    plain = common.join(sa, "a").join(sb, "b").select(
+        "a", "b", jac.alias("jaccard")
+    ).collect()
     for t in (0.3, 0.5, 0.8):
-        want = {
-            (r["a"], r["b"], r["jaccard"])
-            for r in ngram_jaccard_pairs(
-                df, "doc_id", "text", n=3, threshold=t, max_df=100,
-                prefix_filter=False,
-            ).collect()
-        }
+        want = {(r["a"], r["b"], r["jaccard"]) for r in plain if r["jaccard"] >= t}
         got = {
             (r["a"], r["b"], r["jaccard"])
             for r in ngram_jaccard_pairs(
                 df, "doc_id", "text", n=3, threshold=t, max_df=100,
-                prefix_filter=True,
             ).collect()
         }
         assert got == want, (t, got ^ want)
@@ -550,45 +558,6 @@ def test_pagerank_deep_iterations_checkpointed(spark):
     assert got[0] == max(got.values())
 
 
-def test_cache_release_carries_to_derived_frame(spark):
-    """ADVICE-r4: the shingle-cache finalizer attached to the frame
-    ngram_jaccard_pairs returns must survive the intermediate wrapper's
-    death once re-tied to a derived frame via carry_cache_release — and
-    still fire when the outer frame finally dies."""
-    import gc
-
-    from pyspark.sql import functions as F
-
-    from german_newspaper_crawler_spark.operators.dedup import (
-        carry_cache_release, ngram_jaccard_pairs,
-    )
-
-    df = spark.createDataFrame(
-        [(1, "a b c d e f"), (2, "a b c d e g"), (3, "x y z w v u")],
-        "doc_id long, text string",
-    )
-    edges = ngram_jaccard_pairs(df, "doc_id", "text", n=3, threshold=0.1, max_df=100)
-    assert getattr(edges, "_gncs_cache_finalizers", [])
-    out = carry_cache_release(
-        edges.groupBy().agg(F.count("*").cast("long").alias("n_pairs")), edges
-    )
-    moved = list(out._gncs_cache_finalizers)
-    assert moved and all(f.alive for f in moved)
-    assert not edges._gncs_cache_finalizers  # ownership transferred
-
-    del edges
-    gc.collect()
-    # the regression: before the fix the cache was released here, before
-    # any action ran on the derived frame
-    assert all(f.alive for f in moved)
-    [row] = out.collect()
-    assert row["n_pairs"] >= 1
-
-    del out
-    gc.collect()
-    assert not any(f.alive for f in moved)  # release fired exactly once
-
-
 def test_ranking_guards_and_tfidf_semantics(spark):
     import pytest
 
@@ -674,9 +643,9 @@ def test_quantile_hist_accuracy_and_reshuffle_identity(spark):
 
 def test_widen_if_narrow_scan_vs_shuffled_inputs(spark, tmp_path):
     """The widen gate (r6): a narrow file scan repartitions up to the
-    session's shuffle parallelism; anything already past a shuffle (or a
-    cache) is left untouched — probing those with .rdd would eagerly
-    materialize their AQE query stages at plan-build time."""
+    session's shuffle parallelism; anything already past a shuffle is left
+    untouched — probing those with .rdd would eagerly materialize their AQE
+    query stages at plan-build time."""
     from german_newspaper_crawler_spark.operators.dedup import widen_if_narrow
 
     p = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -697,6 +666,13 @@ def test_widen_if_narrow_scan_vs_shuffled_inputs(spark, tmp_path):
     assert widen_if_narrow(agg) is agg
     joined = scan.join(scan.select("id"), "id")
     assert widen_if_narrow(joined) is joined
+    # plan NODES decide, not plan text: a column named like a node class
+    # leaves a scan-shaped frame scan-shaped
+    named = scan.withColumnRenamed("text", "Joined")
+    assert widen_if_narrow(named).rdd.getNumPartitions() == p
+    # a streaming frame has no partitions to probe -> returned as-is
+    stream = spark.readStream.schema(scan.schema).parquet(path)
+    assert widen_if_narrow(stream) is stream
     # a cached SCAN-shaPED frame is still probed (cache substitution
     # happens after analysis, and a 1-partition cache read would serialize
     # the narrow work above it just like the raw scan) -> widened
@@ -712,9 +688,10 @@ def test_shingle_arrays_cache_guards_generate_filter_inlining(spark):
     """Regression guard for the r6-measured 35x trap: exploding a DERIVED
     array column lets InferFiltersFromGenerate + projection collapse inline
     the whole shingle expression (including the regex split) into an
-    inferred filter, re-evaluating it per row. _shingle_arrays persists the
-    arrays, so the explode's optimized plan must read the cache and its
-    inferred filter must not contain the split."""
+    inferred filter, re-evaluating it per row. _shingle_arrays
+    materializes the arrays with a local checkpoint, so the explode's
+    optimized plan must read a LogicalRDD leaf and no split may appear
+    above it."""
     from german_newspaper_crawler_spark.operators.dedup import _shingle_arrays
 
     df = spark.createDataFrame(
@@ -722,13 +699,31 @@ def test_shingle_arrays_cache_guards_generate_filter_inlining(spark):
         ["doc_id", "text"],
     )
     arr0 = _shingle_arrays(df, "doc_id", "text", 3)
-    try:
-        sh = arr0.select("doc_id", F.explode("sh_arr").alias("shingle"))
-        plan = sh._jdf.queryExecution().optimizedPlan().toString()
-        assert "InMemoryRelation" in plan, plan[:500]
-        # the trap signature: split(...) appearing above the cache boundary
-        above_cache = plan.split("InMemoryRelation", 1)[0]
-        assert "split(" not in above_cache, above_cache
-        assert sh.count() == 40  # 4 distinct shingles x 10 docs
-    finally:
-        arr0.unpersist()
+    sh = arr0.select("doc_id", F.explode("sh_arr").alias("shingle"))
+    plan = sh._jdf.queryExecution().optimizedPlan()
+    leaves = plan.collectLeaves()
+    assert [leaves.apply(i).nodeName() for i in range(leaves.size())] == [
+        "LogicalRDD"
+    ], plan.toString()[:500]
+    assert "split(" not in plan.toString(), plan.toString()[:500]
+    assert sh.count() == 40  # 4 distinct shingles x 10 docs
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "dedup_ngram_jaccard", "dedup_components_keepers", "dedup_containment",
+        "curation_pipeline", "text_tfidf_top_terms",
+    ],
+)
+def test_materialized_intermediates_leave_no_cache(spark, name):
+    """Intermediates these queries read twice are local checkpoints, which
+    Spark's ContextCleaner frees: building and collecting the query must
+    leave nothing in the session's cache, even while the result frame is
+    still alive."""
+    from german_newspaper_crawler_spark.plans.queries import REGISTRY
+
+    spark.catalog.clearCache()
+    out = REGISTRY[name].spark(spark, "/root/testdata/sf0.001")
+    assert out.collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
