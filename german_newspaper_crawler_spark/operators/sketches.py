@@ -23,7 +23,7 @@ Design notes (Flajolet et al. 2007 HyperLogLog):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from german_newspaper_crawler_spark.functions.hashing import hash64
@@ -35,8 +35,7 @@ def _hll_max_rank(p: int) -> int:
     [1, 61 - p] and every derived constant follows — register weight
     ``2^(max_rank - M)``, absent-register weight ``2^max_rank``, and the
     harmonic-sum scale ``m² · 2^max_rank = 2^61`` (constant in p,
-    conveniently < 2^63). (ADVICE-r5 rename: the old name/docstring
-    promised an expression-builder pair that was never returned.)"""
+    conveniently < 2^63). Raises on a ``p`` outside [4, 18]."""
     if not 4 <= p <= 18:
         raise ValueError(f"hll precision p={p} outside supported [4, 18]")
     max_rank = 61 - p
@@ -294,44 +293,18 @@ def quantile_hist(
         raise ValueError("quantile_hist requires a non-empty qs list")
     if n_bins < 1 or not hi > lo:
         raise ValueError("quantile_hist requires n_bins >= 1 and hi > lo")
-    binned = (
-        df.where(F.col(value_col).isNotNull())
-        .select(
-            F.col(group_col).alias("g"),
-            _qh_bin_expr(value_col, lo, hi, n_bins).alias("b"),
-        )
-        .groupBy("g", "b")
-        .agg(F.count("*").cast("long").alias("cnt"))
-    )
-    return _qh_estimate_from_bins(binned, qs, lo, hi, n_bins, group_col)
-
-
-def _qh_bin_expr(value_col: str, lo: float, hi: float, n_bins: int):
-    """Clamped fixed-width bin index for ``value_col`` over [lo, hi] —
-    shared by the batch operator and the streaming fold so accumulated
-    bins are bit-identical to a one-shot build over the same rows."""
     width = (F.lit(float(hi)) - F.lit(float(lo))) / F.lit(int(n_bins))
     v = F.col(value_col).cast("double")
-    return F.least(
+    bin_idx = F.least(
         F.greatest(F.floor((v - F.lit(float(lo))) / width).cast("long"), F.lit(0)),
         F.lit(int(n_bins) - 1),
     )
-
-
-def _qh_estimate_from_bins(
-    binned: DataFrame,
-    qs: tuple[float, ...],
-    lo: float,
-    hi: float,
-    n_bins: int,
-    out_group_col: str,
-) -> DataFrame:
-    """Quantile estimates from a (g, b, cnt) bin-count frame — the read
-    side of the sketch, shared by :func:`quantile_hist` and the streaming
-    twin's accumulated-state estimate."""
-    from pyspark.sql import Window
-
-    width = (F.lit(float(hi)) - F.lit(float(lo))) / F.lit(int(n_bins))
+    binned = (
+        df.where(F.col(value_col).isNotNull())
+        .select(F.col(group_col).alias("g"), bin_idx.alias("b"))
+        .groupBy("g", "b")
+        .agg(F.count("*").cast("long").alias("cnt"))
+    )
     win_cum = (
         Window.partitionBy("g").orderBy("b")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -356,7 +329,7 @@ def _qh_estimate_from_bins(
         expanded.withColumn("rk", F.row_number().over(first_hit))
         .where(F.col("rk") == 1)
         .select(
-            F.col("g").alias(out_group_col),
+            F.col("g").alias(group_col),
             "q",
             F.round(est, 6).alias("est_q"),
             F.col("n_rows").cast("long").alias("n_rows"),

@@ -25,7 +25,6 @@ from dataclasses import dataclass
 from datetime import datetime
 from functools import reduce
 from operator import and_
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -39,7 +38,7 @@ from german_newspaper_crawler_spark import schemas
 from german_newspaper_crawler_spark.functions import hashing
 from german_newspaper_crawler_spark.functions.urls import href_valid
 from german_newspaper_crawler_spark.operators import frontier as FR
-from german_newspaper_crawler_spark.sources.fetch import Fetcher
+from german_newspaper_crawler_spark.sources.fetch import Fetcher, fetch_stage
 from german_newspaper_crawler_spark.sources.store import SnapshotStore
 
 
@@ -231,16 +230,10 @@ def fetch_parse_articles_stage(
     gets parsed rows out). This is the stage whose throughput the 100 TB
     target scales with; a split fetch→parse stage pair would move every page
     three times and bottleneck on serialization bandwidth, not CPU.
-    Robots-blocked rows (status -403) are dropped here (never fetched →
-    no article row)."""
-    from german_newspaper_crawler_spark.sources.fetch import (
-        fetch_pandas_batch, stage_input,
-    )
+    Robots-blocked rows (status -403) keep an empty parse for frontier
+    bookkeeping; downstream filters status != -403 before upsert."""
 
-    robots = robots or {}
-    src = stage_input(batch, n_partitions)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def to_rows(f: pd.DataFrame) -> list[tuple]:
         import hashlib
         import zlib
 
@@ -249,40 +242,36 @@ def fetch_parse_articles_stage(
         def sha(s: str) -> str:
             return hashlib.sha256(s.encode("utf-8")).hexdigest()
 
-        last_fetch: dict[str, float] = {}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            f = fetch_pandas_batch(pdf, fetcher, robots, respect_delay, last_fetch, concurrency)
-            rows = []
-            for r in f.itertuples(index=False):
-                # robots-blocked rows stay (for frontier bookkeeping) with an
-                # empty parse; downstream filters status != -403 before upsert
-                html = r.html or ""
-                d = parse_with_registry(r.domain, r.url, html)
-                text = d["text"] or ""
-                # identity per §1.4 (object_model.py:195-214 +
-                # web_requests.py:159-175), python-side so raw html never
-                # crosses the Arrow boundary
-                is_http = r.url.startswith(("http://", "https://"))
-                url_hash = sha(r.url) if is_http else None
-                data = (text or html or "").strip()
-                text_hash = sha(data) if data else None
-                content_hash = url_hash if is_http else text_hash
-                rows.append(
-                    (
-                        r.url, r.host, r.domain, r.base_url, r.priority, r.seq,
-                        r.status, d["titel"], d["teaser"], d["autor"], d["category"],
-                        d["published_date"],
-                        zlib.compress(html.encode("utf-8"), 1),
-                        text, d["figures"],
-                        content_hash, url_hash, text_hash,
-                        bool(html) and html.lstrip().startswith("%PDF"),
-                    )
+        rows = []
+        for r in f.itertuples(index=False):
+            html = r.html or ""
+            d = parse_with_registry(r.domain, r.url, html)
+            text = d["text"] or ""
+            # identity per §1.4 (object_model.py:195-214 +
+            # web_requests.py:159-175), python-side so raw html never
+            # crosses the Arrow boundary
+            is_http = r.url.startswith(("http://", "https://"))
+            url_hash = sha(r.url) if is_http else None
+            data = (text or html or "").strip()
+            text_hash = sha(data) if data else None
+            content_hash = url_hash if is_http else text_hash
+            rows.append(
+                (
+                    r.url, r.host, r.domain, r.base_url, r.priority, r.seq,
+                    r.status, d["titel"], d["teaser"], d["autor"], d["category"],
+                    d["published_date"],
+                    zlib.compress(html.encode("utf-8"), 1),
+                    text, d["figures"],
+                    content_hash, url_hash, text_hash,
+                    bool(html) and html.lstrip().startswith("%PDF"),
                 )
-            yield pd.DataFrame(rows, columns=[f_.name for f_ in _ARTICLE_SCHEMA.fields])
+            )
+        return rows
 
-    return src.mapInPandas(run, schema=_ARTICLE_SCHEMA)
+    return fetch_stage(
+        batch, fetcher, robots, respect_delay, n_partitions, concurrency,
+        schema=_ARTICLE_SCHEMA, to_rows=to_rows,
+    )
 
 
 def fetch_parse_listings_stage(
@@ -295,30 +284,22 @@ def fetch_parse_listings_stage(
 ) -> DataFrame:
     """Fused fetch + anchor-ladder extraction for listing rows (the P3
     flatmap): listing html never leaves the Python worker."""
-    from german_newspaper_crawler_spark.sources.fetch import (
-        fetch_pandas_batch, stage_input,
-    )
 
-    robots = robots or {}
-    src = stage_input(batch, n_partitions)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def to_rows(f: pd.DataFrame) -> list[tuple]:
         from german_newspaper_crawler_spark.parse.html import extract_anchors
 
-        last_fetch: dict[str, float] = {}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            f = fetch_pandas_batch(pdf, fetcher, robots, respect_delay, last_fetch, concurrency)
-            rows = []
-            for r in f.itertuples(index=False):
-                # per-page status marker (sel_rank=-1) for frontier bookkeeping
-                rows.append((r.url, r.domain, r.base_url, None, None, -1, -1, r.status))
-                for href, text, rank, pos in extract_anchors(r.html or ""):
-                    rows.append((r.url, r.domain, r.base_url, href, text, rank, pos, r.status))
-            yield pd.DataFrame(rows, columns=[f_.name for f_ in _ANCHOR_SCHEMA.fields])
+        rows = []
+        for r in f.itertuples(index=False):
+            # per-page status marker (sel_rank=-1) for frontier bookkeeping
+            rows.append((r.url, r.domain, r.base_url, None, None, -1, -1, r.status))
+            for href, text, rank, pos in extract_anchors(r.html or ""):
+                rows.append((r.url, r.domain, r.base_url, href, text, rank, pos, r.status))
+        return rows
 
-    return src.mapInPandas(run, schema=_ANCHOR_SCHEMA)
+    return fetch_stage(
+        batch, fetcher, robots, respect_delay, n_partitions, concurrency,
+        schema=_ANCHOR_SCHEMA, to_rows=to_rows,
+    )
 
 
 _IMAGE_OUT = StructType(
@@ -343,48 +324,40 @@ def fetch_images_stage(
     """Fused fetch + decode + pHash for image rows (G5/G6): image bytes cross
     the Arrow boundary once. Undecodable/blocked/failed rows keep their
     (url, status) for frontier bookkeeping with NULL image fields."""
-    from german_newspaper_crawler_spark.sources.fetch import (
-        fetch_pandas_batch, stage_input,
-    )
 
-    robots = robots or {}
-    src = stage_input(batch, n_partitions)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def to_rows(f: pd.DataFrame) -> list[tuple]:
         from german_newspaper_crawler_spark.functions.codec import decode_image
         from german_newspaper_crawler_spark.functions.phash import phash64
 
-        last_fetch: dict[str, float] = {}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            f = fetch_pandas_batch(pdf, fetcher, robots, respect_delay, last_fetch, concurrency)
-            rows = []
-            for r in f.itertuples(index=False):
-                rgb = None
-                data = bytes(r.content) if r.content is not None else None
-                if data is not None:
-                    try:
-                        rgb = decode_image(data)
-                    except (NotImplementedError, ValueError):
-                        rgb = None
-                if rgb is None:
-                    rows.append(
-                        (r.url, None, None, None, None, None, None,
-                         r.url, r.status, r.priority, r.seq)
+        rows = []
+        for r in f.itertuples(index=False):
+            rgb = None
+            data = bytes(r.content) if r.content is not None else None
+            if data is not None:
+                try:
+                    rgb = decode_image(data)
+                except (NotImplementedError, ValueError):
+                    rgb = None
+            if rgb is None:
+                rows.append(
+                    (r.url, None, None, None, None, None, None,
+                     r.url, r.status, r.priority, r.seq)
+                )
+            else:
+                fmt = "png" if data[:4] == b"\x89PNG"[:4] else "jpeg"
+                rows.append(
+                    (
+                        r.url, data, int(rgb.shape[1]), int(rgb.shape[0]), fmt,
+                        r.anchor_text or "", phash64(rgb),
+                        r.url, r.status, r.priority, r.seq,
                     )
-                else:
-                    fmt = "png" if data[:4] == b"\x89PNG"[:4] else "jpeg"
-                    rows.append(
-                        (
-                            r.url, data, int(rgb.shape[1]), int(rgb.shape[0]), fmt,
-                            r.anchor_text or "", phash64(rgb),
-                            r.url, r.status, r.priority, r.seq,
-                        )
-                    )
-            yield pd.DataFrame(rows, columns=[f_.name for f_ in _IMAGE_OUT.fields])
+                )
+        return rows
 
-    return src.mapInPandas(run, schema=_IMAGE_OUT)
+    return fetch_stage(
+        batch, fetcher, robots, respect_delay, n_partitions, concurrency,
+        schema=_IMAGE_OUT, to_rows=to_rows,
+    )
 
 
 # --- enrichment (X4 whitespace-fallback tagger — pure SQL, no UDF) ------------

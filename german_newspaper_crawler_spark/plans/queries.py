@@ -1131,7 +1131,8 @@ def tpch_q3_shipping_priority(spark, sf_dir):
 @register(
     "events_hourly_rollup",
     "Event-time tumbling-window aggregation (batch form of the Structured "
-    "Streaming hourly rollup; streaming variant in streaming/rollup.py).",
+    "Streaming hourly rollup; streaming variant in "
+    "streaming/incremental.py::streaming_hourly_rollup).",
     oracle=f"""
     SELECT {ts_str_sql("date_trunc('hour', ts)")} AS hour_s, event_type,
            CAST(COUNT(*) AS BIGINT) AS n, ROUND(SUM(value), 4) AS total_value
@@ -1150,8 +1151,8 @@ def events_hourly_rollup(spark, sf_dir):
 
 @register(
     "events_sessionize",
-    "Sessionization: 30-min-gap session ids via lag + running sum window — "
-    "the stateful-streaming operator in its batch formulation.",
+    "Sessionization: 30-min-gap session ids via lag + running sum window "
+    "over each user's events in (ts, event_id) order.",
     oracle="""
     WITH g AS (
       SELECT event_id, user_id, ts,

@@ -29,6 +29,7 @@ from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
 
 from german_newspaper_crawler_spark import schemas
 
@@ -219,28 +220,37 @@ def fetch_stage(
     robots: dict[str, tuple[list[str], int]] | None = None,
     respect_delay: bool = False,
     n_partitions: int | None = None,
+    concurrency: int = 1,
+    schema: StructType = schemas.FETCHED,
+    to_rows: Callable[[pd.DataFrame], list[tuple]] | None = None,
 ) -> DataFrame:
-    """Run the fetch over a pop batch → FETCHED rows.
+    """Run the fetch over a pop batch in ONE ``mapInPandas`` → ``schema`` rows.
 
     ``robots`` maps host → (disallow_prefixes, crawl_delay_ms); it is a
     broadcast-sized dict (one row per host seen this round — at 10^10 scale
     this becomes a broadcast join against the robots table, same shape).
 
-    NOTE: for article rounds prefer the fused fetch+parse stage
-    (plans.crawl.fetch_parse_articles_stage) — it moves the multi-KB html
-    payload across the JVM↔Python Arrow boundary once instead of three
-    times, which is what the throughput scales with.
+    ``to_rows`` turns each fetched pandas batch (the input columns plus
+    status/html/content/fetch_ms) into output tuples in ``schema`` field
+    order, inside the same Python worker; without it the fetched rows are
+    projected to ``schema`` (default :data:`schemas.FETCHED`). The fused
+    crawl stages (plans.crawl ``fetch_parse_*_stage``/``fetch_images_stage``)
+    parse there, so the multi-KB page payload crosses the JVM↔Python Arrow
+    boundary once instead of three times, which is what the throughput
+    scales with.
     """
     robots = robots or {}
     src = stage_input(batch, n_partitions)
+    names = [f.name for f in schema.fields]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         last_fetch: dict[str, float] = {}  # partition-local politeness state
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            yield fetch_pandas_batch(
-                pdf, fetcher, robots, respect_delay, last_fetch
-            )[[f.name for f in schemas.FETCHED.fields]]
+            f = fetch_pandas_batch(
+                pdf, fetcher, robots, respect_delay, last_fetch, concurrency
+            )
+            yield f[names] if to_rows is None else pd.DataFrame(to_rows(f), columns=names)
 
-    return src.mapInPandas(run, schema=schemas.FETCHED)
+    return src.mapInPandas(run, schema=schema)

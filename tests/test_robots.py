@@ -5,6 +5,8 @@ from __future__ import annotations
 
 from datetime import datetime
 
+import pytest
+
 from german_newspaper_crawler_spark.operators.robots import (
     attach_robots, parse_robots_txt, refresh_robots_df, robots_blocked,
 )
@@ -114,9 +116,10 @@ def test_refresh_robots_df_ttl_and_cache(spark, tmp_path):
     assert tbl.count() == 2
 
 
-def test_attach_robots_enforced_in_fetch_stage(spark):
+@pytest.mark.parametrize("concurrency", [1, 4])
+def test_attach_robots_enforced_in_fetch_stage(spark, concurrency):
     """Rules arriving as broadcast-joined columns block rows exactly like the
-    dict path — the scale path end to end."""
+    dict path — the scale path end to end, sequential or host-parallel."""
     from german_newspaper_crawler_spark.sources.fetch import fetch_stage
 
     calls = []
@@ -141,7 +144,12 @@ def test_attach_robots_enforced_in_fetch_stage(spark):
     )
     out = {
         r["url"]: r["status"]
-        for r in fetch_stage(attach_robots(batch, rules), fetcher).collect()
+        # one partition: both hosts share a batch, so concurrency 4 takes the
+        # host-parallel path
+        for r in fetch_stage(
+            attach_robots(batch, rules), fetcher, n_partitions=1,
+            concurrency=concurrency,
+        ).collect()
     }
     assert out["https://h.example/intern/s"] == -403
     assert out["https://h.example/pub/a"] == 200

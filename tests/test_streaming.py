@@ -3,7 +3,6 @@ dedup across restarts (T1/T2/T3) and event-time windowed rollup."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     StringType, StructField, StructType, TimestampType,
@@ -76,514 +75,3 @@ def test_streaming_hourly_rollup_matches_batch(spark, tmp_path):
         batch.select("hour", "event_type", "n")
     )
     assert diff.count() == 0
-
-
-def test_stateful_sessionize_across_restarts(spark, tmp_path):
-    """applyInPandasWithState sessionization: state (last ts, session id)
-    survives micro-batch restarts — a session spanning two availableNow runs
-    keeps its id; a large gap in the second run opens a new session."""
-    from datetime import datetime
-
-    from german_newspaper_crawler_spark.streaming.incremental import (
-        run_available_now, streaming_sessionize,
-    )
-    from pyspark.sql.types import LongType, StructField, StructType, TimestampType
-
-    schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("event_id", LongType()),
-            StructField("ts", TimestampType()),
-        ]
-    )
-    src, out, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ck")
-
-    def write(rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(src)
-
-    t = lambda m: datetime(2026, 1, 1, 10, m, 0)  # noqa: E731
-    write([(1, 1, t(0)), (1, 2, t(5)), (2, 10, t(0))])
-    stream = streaming_sessionize(spark.readStream.schema(schema).parquet(src), gap_s=600)
-    run_available_now(stream, ckpt, out)
-
-    # second run: u1 event within gap (same session) + u1 event far later
-    # (new session); u2 event within gap
-    write([(1, 3, t(14)), (1, 4, t(50)), (2, 11, t(8))])
-    stream = streaming_sessionize(spark.readStream.schema(schema).parquet(src), gap_s=600)
-    run_available_now(stream, ckpt, out)
-
-    got = {
-        (r["user_id"], r["event_id"]): r["session_id"]
-        for r in spark.read.parquet(out).collect()
-    }
-    assert got[(1, 1)] == got[(1, 2)] == 1
-    assert got[(1, 3)] == 1  # continues the session from the PREVIOUS run
-    assert got[(1, 4)] == 2  # > gap → new session
-    assert got[(2, 10)] == got[(2, 11)] == 1
-
-
-def test_streaming_phash_neardup_matches_batch_across_restarts(spark, tmp_path):
-    """Streaming banded pHash near-dup: two availableNow runs (restart in
-    between) over chunked arrivals accumulate EXACTLY the batch
-    banded_hamming_pairs result — state (bucket posting lists) survives."""
-    from pyspark.sql import functions as F
-
-    from german_newspaper_crawler_spark.functions.hashing import hash64
-    from german_newspaper_crawler_spark.operators.dedup import banded_hamming_pairs
-    from german_newspaper_crawler_spark.streaming.incremental import (
-        run_available_now, streaming_phash_neardup,
-    )
-
-    # the g6 synthetic phash layout: groups of 4 consecutive ids share a
-    # base hash, differing in the low 2 bits → true near-dups exist
-    def ph_df(lo, hi):
-        return spark.range(lo, hi).select(
-            F.col("id"),
-            hash64(F.floor(F.col("id") / 4).cast("long").cast("string"))
-            .bitwiseXOR(F.col("id") % 4)
-            .alias("phash"),
-        )
-
-    expected = {
-        (r["a"], r["b"], r["hamming"])
-        for r in banded_hamming_pairs(
-            ph_df(0, 64), id_col="id", hash_col="phash",
-            n_bands=4, band_bits=15, max_hamming=4,
-        ).withColumn("hamming", F.col("hamming").cast("int")).collect()
-    }
-    assert expected  # the synthetic layout must actually produce near-dups
-
-    src, out, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ck")
-    ph_df(0, 40).coalesce(1).write.mode("append").parquet(src)
-    schema = "id bigint, phash bigint"
-    stream = streaming_phash_neardup(spark.readStream.schema(schema).parquet(src))
-    run_available_now(stream, ckpt, out)
-
-    ph_df(40, 64).coalesce(1).write.mode("append").parquet(src)  # second chunk
-    stream = streaming_phash_neardup(spark.readStream.schema(schema).parquet(src))
-    run_available_now(stream, ckpt, out)
-
-    got_rows = spark.read.parquet(out).dropDuplicates(["a", "b"]).collect()
-    got = {(r["a"], r["b"], r["hamming"]) for r in got_rows}
-    assert got == expected
-
-
-def test_streaming_minhash_candidates_match_batch_across_restarts(spark, tmp_path):
-    """Streaming MinHash set-similarity join: python-side signatures are
-    bit-identical to the batch operator's shared-hash64 band keys, so the
-    accumulated stream output over chunked arrivals + restart equals
-    minhash_lsh_candidates exactly."""
-    from german_newspaper_crawler_spark.operators.dedup import minhash_lsh_candidates
-    from german_newspaper_crawler_spark.streaming.incremental import (
-        run_available_now, streaming_minhash_candidates,
-    )
-
-    docs = (
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        .select("doc_id", "text")
-        .where("doc_id < 150")
-        .cache()
-    )
-    expected = {
-        (r["a"], r["b"])
-        for r in minhash_lsh_candidates(docs, "doc_id", "text").collect()
-    }
-    assert expected  # fixture docs must actually produce candidates
-
-    src, out, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ck")
-    docs.where("doc_id < 80").coalesce(1).write.mode("append").parquet(src)
-    schema = "doc_id bigint, text string"
-    stream = streaming_minhash_candidates(
-        spark.readStream.schema(schema).parquet(src)
-    )
-    run_available_now(stream, ckpt, out)
-
-    docs.where("doc_id >= 80").coalesce(1).write.mode("append").parquet(src)
-    stream = streaming_minhash_candidates(
-        spark.readStream.schema(schema).parquet(src)
-    )
-    run_available_now(stream, ckpt, out)
-
-    got = {
-        (r["a"], r["b"])
-        for r in spark.read.parquet(out).dropDuplicates(["a", "b"]).collect()
-    }
-    assert got == expected
-
-
-def test_streaming_paragraph_dedup_matches_sequential_batches_and_restarts(
-    spark, tmp_path
-):
-    """foreachBatch paragraph dedup: (a) across the stream's lifetime every
-    repeated paragraph survives exactly once, in its first-arrival doc;
-    (b) restart from checkpoint processes only new files and still dedups
-    against ALL prior state; (c) reprocessing a batch (at-least-once
-    replay) is bit-identical thanks to the added_batch fence."""
-    from pyspark.sql.types import ArrayType, LongType
-
-    from german_newspaper_crawler_spark.sources.store import SnapshotStore
-    from german_newspaper_crawler_spark.streaming.incremental import (
-        streaming_paragraph_dedup,
-    )
-
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("paras", ArrayType(StringType())),
-        ]
-    )
-    src = str(tmp_path / "docs")
-    ckpt = str(tmp_path / "ckpt")
-    store = SnapshotStore(str(tmp_path / "store"))
-
-    def write_batch(rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-    # batch 1: P-boiler repeats within the batch (doc 1 wins over doc 2)
-    write_batch(
-        [(1, ["P-boiler", "P-a1"]), (2, ["P-boiler", "P-a2"])]
-    )
-    # batch 2: P-boiler repeats ACROSS batches; doc 3 contributes one
-    # fresh para; doc 4 is all-duplicate -> empty clean_text
-    write_batch([(3, ["P-boiler", "P-b1"]), (4, ["P-boiler", "P-a1"])])
-
-    def run():
-        stream = streaming_paragraph_dedup(
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src),
-            store, ckpt,
-        )
-        stream.start().awaitTermination()
-
-    run()
-    got = {
-        r["doc_id"]: (r["clean_text"], r["n_kept"], r["n_total"])
-        for r in store.read(spark, "clean_docs").collect()
-    }
-    assert got == {
-        1: ("P-boiler\n\nP-a1", 2, 2),
-        2: ("P-a2", 1, 2),
-        3: ("P-b1", 1, 2),
-        4: ("", 0, 2),
-    }
-
-    # (b) restart: only the new file is processed; dedup sees all prior
-    write_batch([(5, ["P-b1", "P-c1"]), (6, ["P-c1", "P-c2"])])
-    run()
-    got = {
-        r["doc_id"]: (r["clean_text"], r["n_kept"])
-        for r in store.read(spark, "clean_docs").collect()
-    }
-    assert got[5] == ("P-c1", 1)  # P-b1 seen in batch 2; P-c1 fresh, 5 wins
-    assert got[6] == ("P-c2", 1)  # P-c1 lost to doc 5 within the batch
-    assert got[1] == ("P-boiler\n\nP-a1", 2)  # untouched
-
-    # (c) replay fence: re-running an ALREADY-COMMITTED batch id must not
-    # drop its own paragraphs (crash between state commit and checkpoint)
-    seen_before = {
-        (r["__h"], r["added_batch"])
-        for r in store.read(spark, "seen_paras").collect()
-    }
-    replay_df = spark.createDataFrame(
-        [(5, ["P-b1", "P-c1"]), (6, ["P-c1", "P-c2"])], schema
-    )
-    # the per-batch callable is exposed — invoke directly with the batch
-    # id the stream assigned (one file per batch, 0-indexed)
-    from german_newspaper_crawler_spark.streaming.incremental import (
-        paragraph_dedup_batch,
-    )
-    paragraph_dedup_batch(store)(replay_df, 2)
-    got2 = {
-        r["doc_id"]: (r["clean_text"], r["n_kept"])
-        for r in store.read(spark, "clean_docs").collect()
-    }
-    assert got2[5] == ("P-c1", 1) and got2[6] == ("P-c2", 1)
-    seen_after = {
-        (r["__h"], r["added_batch"])
-        for r in store.read(spark, "seen_paras").collect()
-    }
-    assert seen_after == seen_before
-
-
-def test_streaming_substring_dedup_matches_batch_and_replays(spark, tmp_path):
-    """foreachBatch ExactSubstr twin: with arrival order = id order, the
-    accumulated stream output EQUALS remove_repeated_spans over the full
-    corpus (the batch winner min(id, pos) IS the first arrival); restart
-    processes only new files against all prior span state; replaying a
-    committed batch id is bit-identical (added_batch fence)."""
-    from pyspark.sql.types import LongType
-
-    from german_newspaper_crawler_spark.operators.dedup import remove_repeated_spans
-    from german_newspaper_crawler_spark.sources.store import SnapshotStore
-    from german_newspaper_crawler_spark.streaming.incremental import (
-        streaming_substring_dedup, substring_dedup_batch,
-    )
-
-    schema = StructType(
-        [StructField("doc_id", LongType()), StructField("text", StringType())]
-    )
-    shared = "a b c d"  # k=4: one shared span per repeat site
-    chunk1 = [(1, f"{shared} x1 y1 z1"), (2, f"p2 {shared} q2 r2")]
-    chunk2 = [(3, f"{shared} {shared}"), (4, f"u4 {shared} v4"), (5, "unique five token doc here")]
-
-    src, ckpt = str(tmp_path / "docs"), str(tmp_path / "ckpt")
-    store = SnapshotStore(str(tmp_path / "store"))
-
-    def write_batch(rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(src)
-
-    def run():
-        stream = streaming_substring_dedup(
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src),
-            store, ckpt, k=4,
-        )
-        stream.start().awaitTermination()
-
-    write_batch(chunk1)
-    run()
-    write_batch(chunk2)  # restart: only the new file processes
-    run()
-
-    got = {
-        r["doc_id"]: (r["clean_text"], r["n_kept"], r["n_total"])
-        for r in store.read(spark, "clean_docs_substr").collect()
-    }
-    expect = {
-        r["doc_id"]: (r["clean_text"], r["n_kept"], r["n_total"])
-        for r in remove_repeated_spans(
-            spark.createDataFrame(chunk1 + chunk2, schema), "doc_id", "text", k=4
-        ).collect()
-    }
-    assert got == expect
-    assert got[3] == ("", 0, 8)  # every token covered by duplicate spans
-    assert got[1][1] == 7  # first-arrival doc untouched
-
-    # replay fence: re-running the committed batch 1 (chunk2's file) must
-    # not suppress its own spans as "seen"
-    seen_before = {
-        (r["__h"], r["added_batch"])
-        for r in store.read(spark, "seen_spans").collect()
-    }
-    substring_dedup_batch(store, k=4)(spark.createDataFrame(chunk2, schema), 1)
-    got2 = {
-        r["doc_id"]: (r["clean_text"], r["n_kept"], r["n_total"])
-        for r in store.read(spark, "clean_docs_substr").collect()
-    }
-    assert got2 == expect
-    seen_after = {
-        (r["__h"], r["added_batch"])
-        for r in store.read(spark, "seen_spans").collect()
-    }
-    assert seen_after == seen_before
-
-
-def test_streaming_hll_registers_merge_losslessly(spark, tmp_path):
-    """foreachBatch HLL twin: MAX-merged registers over chunked arrivals
-    (with a restart) equal the batch sketch over the full data — the
-    estimate is an exact function of the register multiset, so the
-    accumulated stream estimate == hll_distinct's, bit for bit. Replaying
-    a batch is idempotent without any fence (max is idempotent)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    from german_newspaper_crawler_spark.operators.sketches import hll_distinct
-    from german_newspaper_crawler_spark.sources.store import SnapshotStore
-    from german_newspaper_crawler_spark.streaming.incremental import (
-        hll_batch, hll_estimate, streaming_hll_distinct,
-    )
-
-    schema = StructType(
-        [StructField("grp", StringType()), StructField("key", LongType())]
-    )
-    c1 = spark.range(3000).select(
-        (F.col("id") % 2).cast("string").alias("grp"), (F.col("id") % 2500).alias("key"))
-    c2 = spark.range(3000, 6000).select(
-        (F.col("id") % 2).cast("string").alias("grp"), (F.col("id") % 2500).alias("key"))
-
-    src, ckpt = str(tmp_path / "rows"), str(tmp_path / "ckpt")
-    store = SnapshotStore(str(tmp_path / "store"))
-    c1.coalesce(1).write.mode("append").parquet(src)
-
-    def run():
-        stream = streaming_hll_distinct(
-            spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src),
-            store, ckpt, key_col="key", group_col="grp", p=12,
-        )
-        stream.start().awaitTermination()
-
-    run()
-    c2.coalesce(1).write.mode("append").parquet(src)
-    run()  # restart: processes only the new file
-
-    got = {
-        r["g"]: r["est_distinct"] for r in hll_estimate(spark, store).collect()
-    }
-    expect = {
-        r["grp"]: r["est_distinct"]
-        for r in hll_distinct(c1.unionByName(c2), "key", "grp", p=12).collect()
-    }
-    assert got == expect  # lossless register merge → identical estimate
-
-    # replay: re-folding an already-folded chunk changes nothing
-    hll_batch(store, "key", "grp")(c2, 99)
-    got2 = {
-        r["g"]: r["est_distinct"] for r in hll_estimate(spark, store).collect()
-    }
-    assert got2 == expect
-
-
-def test_streaming_countmin_fenced_sum_merge(spark, tmp_path):
-    """foreachBatch Count-Min twin: cell-wise SUM-merged counters over
-    chunked arrivals (with a restart) equal the batch sketch over the full
-    data bit for bit — counters are exact bigints and addition commutes
-    with chunking. Addition is NOT idempotent, so the per-cell last_batch
-    fence must make replaying an already-folded batch a no-op (the failure
-    mode the HLL twin doesn't have)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    from german_newspaper_crawler_spark.operators.sketches import countmin_estimate
-    from german_newspaper_crawler_spark.sources.store import SnapshotStore
-    from german_newspaper_crawler_spark.streaming.incremental import (
-        countmin_batch, countmin_stream_estimate, streaming_countmin,
-    )
-
-    schema = StructType([StructField("key", LongType())])
-    c1 = spark.range(4000).select((F.col("id") % 60).alias("key"))
-    c2 = spark.range(4000, 9000).select((F.col("id") % 60).alias("key"))
-
-    src, ckpt = str(tmp_path / "rows"), str(tmp_path / "ckpt")
-    store = SnapshotStore(str(tmp_path / "store"))
-    c1.coalesce(1).write.mode("append").parquet(src)
-
-    def run():
-        stream = streaming_countmin(
-            spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src),
-            store, ckpt, key_col="key", d=3, w=2048,
-        )
-        stream.start().awaitTermination()
-
-    run()
-    c2.coalesce(1).write.mode("append").parquet(src)
-    run()  # restart: processes only the new file (batch id advances)
-
-    q = spark.range(60).select(F.col("id").alias("key"))
-    got = {
-        r["key"]: r["est_count"]
-        for r in countmin_stream_estimate(spark, store, q, "key").collect()
-    }
-    expect = {
-        r["key"]: r["est_count"]
-        for r in countmin_estimate(c1.unionByName(c2), "key", q, d=3, w=2048).collect()
-    }
-    assert got == expect  # chunking + restart invisible in the counters
-
-    # replay: re-folding an already-processed batch id adds nothing
-    last_batch = (
-        store.read(spark, "cm_cells").agg(F.max("last_batch")).collect()[0][0]
-    )
-    countmin_batch(store, "key")(c2, last_batch)
-    got2 = {
-        r["key"]: r["est_count"]
-        for r in countmin_stream_estimate(spark, store, q, "key").collect()
-    }
-    assert got2 == expect
-
-    # a genuinely NEW batch id does count (the fence is per-batch, not a
-    # permanent freeze)
-    countmin_batch(store, "key")(c1, last_batch + 1)
-    got3 = {
-        r["key"]: r["est_count"]
-        for r in countmin_stream_estimate(spark, store, q, "key").collect()
-    }
-    twice = {
-        r["key"]: r["est_count"]
-        for r in countmin_estimate(
-            c1.unionByName(c2).unionByName(c1), "key", q, d=3, w=2048
-        ).collect()
-    }
-    assert got3 == twice
-
-
-def test_streaming_quantile_hist_fenced_sum_merge(spark, tmp_path):
-    """foreachBatch histogram-quantile twin: (g, b)-cell SUM-merged bin
-    counts over chunked arrivals (with a restart) make the accumulated
-    estimate equal the one-shot batch sketch bit for bit; bin counts are
-    additive like Count-Min cells, so the per-cell last_batch fence must
-    make replays a no-op."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    from german_newspaper_crawler_spark.operators.sketches import quantile_hist
-    from german_newspaper_crawler_spark.sources.store import SnapshotStore
-    from german_newspaper_crawler_spark.streaming.incremental import (
-        quantile_hist_batch, quantile_hist_stream_estimate,
-        streaming_quantile_hist,
-    )
-
-    schema = StructType(
-        [StructField("v", LongType()), StructField("grp", StringType())]
-    )
-    c1 = spark.range(3000).select(
-        ((F.col("id") * 37) % 1000).alias("v"),
-        F.concat(F.lit("g"), (F.col("id") % 2).cast("string")).alias("grp"),
-    )
-    c2 = spark.range(3000, 7000).select(
-        ((F.col("id") * 37) % 1000).alias("v"),
-        F.concat(F.lit("g"), (F.col("id") % 2).cast("string")).alias("grp"),
-    )
-    src, ckpt = str(tmp_path / "rows"), str(tmp_path / "ckpt")
-    store = SnapshotStore(str(tmp_path / "store"))
-    c1.coalesce(1).write.mode("append").parquet(src)
-
-    def run():
-        stream = streaming_quantile_hist(
-            spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src),
-            store, ckpt, value_col="v", group_col="grp",
-            lo=0.0, hi=1000.0, n_bins=50,
-        )
-        stream.start().awaitTermination()
-
-    run()
-    c2.coalesce(1).write.mode("append").parquet(src)
-    run()  # restart: only the new file folds (batch id advances)
-
-    qs = (0.25, 0.5, 0.95)
-    got = sorted(
-        map(tuple, quantile_hist_stream_estimate(
-            spark, store, "grp", qs, 0.0, 1000.0, n_bins=50
-        ).collect())
-    )
-    expect = sorted(
-        map(tuple, quantile_hist(
-            c1.unionByName(c2), "v", "grp", qs=qs, lo=0.0, hi=1000.0, n_bins=50
-        ).collect())
-    )
-    assert got == expect  # chunking + restart invisible in the estimate
-
-    # replay fence: re-folding an already-processed batch id is a no-op
-    last_batch = (
-        store.read(spark, "qh_bins").agg(F.max("last_batch")).collect()[0][0]
-    )
-    quantile_hist_batch(store, "v", "grp", 0.0, 1000.0, 50)(c2, last_batch)
-    got2 = sorted(
-        map(tuple, quantile_hist_stream_estimate(
-            spark, store, "grp", qs, 0.0, 1000.0, n_bins=50
-        ).collect())
-    )
-    assert got2 == expect
-
-    # a genuinely new batch id counts: n_rows grows by len(c1)
-    quantile_hist_batch(store, "v", "grp", 0.0, 1000.0, 50)(c1, last_batch + 1)
-    n_after = {
-        (r["grp"],): r["n_rows"]
-        for r in quantile_hist_stream_estimate(
-            spark, store, "grp", (0.5,), 0.0, 1000.0, n_bins=50
-        ).collect()
-    }
-    assert sum(n_after.values()) == 7000 + 3000
