@@ -73,6 +73,13 @@ def urljoin_batch(bases: pd.Series, hrefs: pd.Series) -> pd.Series:
 
 
 @F.pandas_udf(StringType())
+def urljoin_udf(bases: pd.Series, hrefs: pd.Series) -> pd.Series:
+    """Plain ``urljoin`` in one Arrow batch — no canonicalization, so the
+    crawl's seen-set digests match the reference bit-for-bit (F5)."""
+    return urljoin_batch(bases, hrefs)
+
+
+@F.pandas_udf(StringType())
 def absolutize_udf(bases: pd.Series, hrefs: pd.Series) -> pd.Series:
     """urljoin + canonicalize in one Arrow batch."""
     return canonicalize_batch(urljoin_batch(bases, hrefs))

@@ -28,11 +28,13 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType, IntegerType, LongType, StructField, StructType,
 )
+
+from german_newspaper_crawler_spark.functions.hashing import hash64
 
 BLOOM_SCHEMA = StructType(
     [
@@ -160,6 +162,27 @@ def bloom_prefilter(
     ).drop("blob", "k", "m", "n_items", "__bucket")
 
 
+def seen_bucket(hash_col: Column | str, n_buckets: int) -> Column:
+    """The seen-set bucket of a digest: ``pmod(hash64(h), n_buckets)``.
+    The builders and :func:`split_maybe_seen` share it, so a probed digest
+    always meets the blob its own insert went to."""
+    return F.pmod(hash64(hash_col), F.lit(n_buckets)).cast("int")
+
+
+def split_maybe_seen(
+    df: DataFrame, blooms: DataFrame, hash_col: str, n_buckets: int
+) -> tuple[DataFrame, DataFrame]:
+    """``(fresh, maybe)``: rows whose ``hash_col`` digest is provably absent
+    from the seen-set blooms, and rows that must fall through to the exact
+    seen join. A NULL digest probes as the ``"0"*30`` hex sentinel; either
+    half keeps such a row, since NULL never matches the exact join."""
+    probe = df.withColumn("__h", F.coalesce(F.col(hash_col), F.lit("0" * 30)))
+    probed = bloom_prefilter(probe, blooms, "__h", seen_bucket("__h", n_buckets))
+    fresh = probed.where(~F.col("maybe_seen")).drop("maybe_seen", "__h")
+    maybe = probed.where(F.col("maybe_seen")).drop("maybe_seen", "__h")
+    return fresh, maybe
+
+
 def capacity_of(m: int, fpr: float) -> int:
     """Inverse of :func:`params_for`: the item count an m-bit filter was
     sized for at the target FPR."""
@@ -189,9 +212,7 @@ def ensure_blooms(
 
     Returns the merged per-bucket blobs, or None when there is nothing yet.
     """
-    from german_newspaper_crawler_spark.functions.hashing import hash64
-
-    bucket = F.pmod(hash64(hash_col), F.lit(n_buckets)).cast("int")
+    bucket = seen_bucket(hash_col, n_buckets)
     existing = store.read(spark, "blooms", BLOOM_SCHEMA) if store.exists("blooms") else None
     if existing is not None:
         head = existing.select("m", "k").first()
@@ -223,9 +244,7 @@ def update_blooms(
     scan ∝ batch size. Bootstraps the base filter from the first batch when
     the table doesn't exist yet (sized with generous headroom at the
     configured ``fpr``; :func:`ensure_blooms` re-sizes on overflow later)."""
-    from german_newspaper_crawler_spark.functions.hashing import hash64
-
-    bucket = F.pmod(hash64(hash_col), F.lit(n_buckets)).cast("int")
+    bucket = seen_bucket(hash_col, n_buckets)
     head = (
         store.read(spark, "blooms").select("m", "k").first()
         if store.exists("blooms")

@@ -4,14 +4,17 @@ The near-dup operators (pHash banded-hamming, n-gram Jaccard, MinHash+LSH,
 embedding cosine) emit pair edges; a training-data pipeline then needs the
 *clusters* — each document labeled with a canonical representative so one
 keeper survives per cluster. Implemented as iterative min-label propagation
-(large-star/small-star style) on DataFrames:
+on DataFrames:
 
     label(v) ← min(label(v), min(label(u) for u~v))   until fixpoint
 
-Each iteration is one join + groupBy (shuffle on vertex id); convergence in
-O(log n) rounds for typical near-dup components (which are tiny — pairs and
-small cliques), with an explicit cap. Driver checks only the tiny converged
-flag per round — no collect of data.
+Each iteration is one join + groupBy (shuffle on vertex id). A label moves
+one edge per iteration, so convergence takes about as many iterations as
+the largest component's diameter: near-dup pairs and small cliques settle
+in a few, but a chain of n revisions needs n. The iteration count is
+capped, and hitting the cap raises instead of returning unconverged
+labels. Driver checks only the tiny changed flag per round — no collect of
+data.
 """
 
 from __future__ import annotations
@@ -26,7 +29,8 @@ def connected_components(
     """(a, b) pair edges → (id, component) with component = min member id.
 
     Isolated vertices don't appear (callers left-join and coalesce to self —
-    see :func:`dedup_keepers`).
+    see :func:`dedup_keepers`). Raises ``RuntimeError`` when a label still
+    changed in each of the ``max_iter`` iterations.
     """
     sym = edges.select(F.col(a).alias("src"), F.col(b).alias("dst")).unionByName(
         edges.select(F.col(b).alias("src"), F.col(a).alias("dst"))
@@ -68,8 +72,11 @@ def connected_components(
         changed = labels.where("__changed").limit(1).count()
         labels = labels.drop("__changed")
         if changed == 0:
-            break
-    return labels
+            return labels
+    raise RuntimeError(
+        f"connected_components: labels still changing after {max_iter} "
+        "iterations (a component's diameter exceeds the cap)"
+    )
 
 
 def dedup_keepers(

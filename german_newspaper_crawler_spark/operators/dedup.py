@@ -244,23 +244,6 @@ def _attach_df(arr0: DataFrame, id_col: str) -> DataFrame:
     )
 
 
-def _inverted_index(sh: DataFrame, id_col: str):
-    """Uncapped inverted-index core over (id, shingle) rows: (common, sizes)
-    with ``common`` = (a, b, c=|A∩B|) from the classic shingle self-join —
-    per-group memory stays O(1) even for degenerate mega-postings (but set
-    max_df at scale, see :func:`_capped_inverted_index`)."""
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
-    a = sh.select(F.col(id_col).alias("a"), "shingle")
-    b = sh.select(F.col(id_col).alias("b"), "shingle")
-    common = (
-        a.join(b, "shingle")
-        .where(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("c"))
-    )
-    return common, sizes
-
-
 def _capped_inverted_index(arr0: DataFrame, id_col: str, max_df: int):
     """Shared df-capped inverted-index core: (common, sizes) where ``common``
     is (a, b, c=|A∩B|) over shingles with df in [2, max_df] and ``sizes`` is
@@ -520,40 +503,25 @@ def _shingle_arrays(
 
 def ngram_jaccard_pairs(
     df: DataFrame, id_col: str, text_col: str, n: int = 3, threshold: float = 0.5,
-    max_df: int | None = None,
+    max_df: int = 100,
 ) -> DataFrame:
-    """Near-dup pairs by n-gram Jaccard via inverted-index self-join.
+    """Near-dup pairs by n-gram Jaccard over shingle posting lists.
 
-    jaccard(A,B) = |A∩B| / (|A|+|B|-|A∩B|); the join on `shingle` computes
-    all |A∩B| > 0 pairs in one shuffle — no pair enumeration. Threshold is
-    applied to the 6-dp-rounded value (cross-engine boundary agreement).
+    jaccard(A,B) = |A∩B| / (|A|+|B|-|A∩B|); candidates come from shared
+    postings — no pair enumeration. Threshold is applied to the
+    6-dp-rounded value (cross-engine boundary agreement).
 
-    ``max_df`` caps shingle document frequency BEFORE the self-join: a
-    stop-shingle shared by k docs would otherwise create a k² join bucket —
+    ``max_df`` caps shingle document frequency BEFORE pairing: a
+    stop-shingle shared by k docs would otherwise create a k² bucket —
     quadratic skew at web scale. Shingles with df > max_df are dropped from
     both the intersection and the per-doc sizes (Jaccard over informative
     shingles — the standard near-dup practice); high-df shingles carry no
     near-dup signal anyway. At 10^8 docs, max_df ≈ max(1000, 0.001% of N).
-    With ``max_df`` the candidates are also pruned PPJoin-style before the
-    exact verify — see :func:`_prefix_filtered_pairs`.
+    The candidates are pruned PPJoin-style before the exact verify — see
+    :func:`_prefix_filtered_pairs`.
     """
-    if max_df is not None:
-        arr0 = _shingle_arrays(df, id_col, text_col, n)
-        return _prefix_filtered_pairs(arr0, id_col, max_df, threshold)
-    common, sizes = _inverted_index(word_shingles(df, id_col, text_col, n), id_col)
-    sa = sizes.select(F.col(id_col).alias("a"), F.col("n_sh").alias("na"))
-    sb = sizes.select(F.col(id_col).alias("b"), F.col("n_sh").alias("nb"))
-    jac = F.round(
-        F.col("c").cast("double") / (F.col("na") + F.col("nb") - F.col("c")).cast("double"),
-        6,
-    )
-    return (
-        common.join(sa, "a")
-        .join(sb, "b")
-        .withColumn("jaccard", jac)
-        .where(F.col("jaccard") >= threshold)
-        .select("a", "b", "jaccard")
-    )
+    arr0 = _shingle_arrays(df, id_col, text_col, n)
+    return _prefix_filtered_pairs(arr0, id_col, max_df, threshold)
 
 
 def minhash_lsh_candidates(
@@ -638,7 +606,7 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 60) -> DataFr
 
 def containment_pairs(
     df: DataFrame, id_col: str, text_col: str, n: int = 3,
-    threshold: float = 0.9, max_df: int | None = None,
+    threshold: float = 0.9, max_df: int = 100,
 ) -> DataFrame:
     """Set-containment near-dup join (the LCJoin problem, ICDE 2019):
     directional pairs (inner, outer) with containment(inner→outer) =
@@ -647,15 +615,12 @@ def containment_pairs(
     Catches what Jaccard misses: a long article QUOTING a short one has low
     Jaccard (union dominated by the long doc) but containment ≈ 1.0 — the
     subset/quotation dedup case in training corpora. Candidates come from
-    the same inverted-index join as :func:`ngram_jaccard_pairs` (optional
-    ``max_df`` stop-shingle cap); never pair enumeration. Output:
-    (inner, outer, containment[6dp]).
+    the df-capped inverted index (:func:`_capped_inverted_index`, the same
+    ``max_df`` stop-shingle cap as :func:`ngram_jaccard_pairs`); never pair
+    enumeration. Output: (inner, outer, containment[6dp]).
     """
-    if max_df is not None:
-        arr0 = _shingle_arrays(df, id_col, text_col, n)
-        common, sizes = _capped_inverted_index(arr0, id_col, max_df)
-    else:
-        common, sizes = _inverted_index(word_shingles(df, id_col, text_col, n), id_col)
+    arr0 = _shingle_arrays(df, id_col, text_col, n)
+    common, sizes = _capped_inverted_index(arr0, id_col, max_df)
     sa = sizes.select(F.col(id_col).alias("a"), F.col("n_sh").alias("na"))
     sb = sizes.select(F.col(id_col).alias("b"), F.col("n_sh").alias("nb"))
     both = common.join(sa, "a").join(sb, "b")

@@ -218,6 +218,25 @@ def _det_centroids(
     return cents  # (n_lists, dim), unit norm
 
 
+def _cell_of(centroids: np.ndarray):
+    """Pandas UDF: vector → index of its nearest centroid (cosine). Sims
+    are ROUNDED to 6dp before the argmax, whose ties go to the lowest cell,
+    so cell assignment is reproducible across engines (the DuckDB oracles
+    recompute it relationally)."""
+    from pyspark.sql.types import IntegerType
+
+    @F.pandas_udf(IntegerType())
+    def cell_of(vecs: pd.Series) -> pd.Series:
+        if not len(vecs):  # empty Arrow batch → np.asarray([]) is 1-D
+            return pd.Series([], dtype="int32")
+        m = np.asarray([np.asarray(v, dtype=np.float64) for v in vecs])
+        m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
+        sims = np.round(m @ centroids.T, 6)
+        return pd.Series(sims.argmax(axis=1).astype("int32"))
+
+    return cell_of
+
+
 def semdedup(
     corpus: DataFrame,
     id_col: str,
@@ -252,19 +271,9 @@ def semdedup(
     )
 
     centroids = _det_centroids(corpus, id_col, vec_col, n_clusters, kmeans_iters)
-
-    @F.pandas_udf(IntegerType())
-    def cell_of(vecs: pd.Series) -> pd.Series:
-        if not len(vecs):  # empty Arrow batch → np.asarray([]) is 1-D
-            return pd.Series([], dtype="int32")
-        m = np.asarray([np.asarray(v, dtype=np.float64) for v in vecs])
-        m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-        sims = np.round(m @ centroids.T, 6)
-        return pd.Series(sims.argmax(axis=1).astype("int32"))
-
     assigned = corpus.select(
         F.col(id_col), _as_double(vec_col).alias("__v")
-    ).withColumn("cell", cell_of(F.col("__v")))
+    ).withColumn("cell", _cell_of(centroids)(F.col("__v")))
 
     id_field = assigned.schema[id_col]
     out_schema = StructType(
@@ -386,19 +395,10 @@ def ivf_topk(
 
     centroids = _det_centroids(corpus, id_col, vec_col, n_lists, kmeans_iters)
 
-    # sims are ROUNDED to 6dp before argmax/argsort with lowest-cell
-    # tie-break, so cell assignment is reproducible across engines (the
-    # kmeans_iters=0 variant has an exact DuckDB oracle — queries.py
-    # ann_ivf_topk recomputes the hash-sampled centroids relationally)
-    @F.pandas_udf(IntegerType())
-    def cell_of(vecs: pd.Series) -> pd.Series:
-        if not len(vecs):  # empty Arrow batch → np.asarray([]) is 1-D
-            return pd.Series([], dtype="int32")
-        m = np.asarray([np.asarray(v, dtype=np.float64) for v in vecs])
-        m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-        sims = np.round(m @ centroids.T, 6)
-        return pd.Series(sims.argmax(axis=1).astype("int32"))
-
+    # probe order uses the same 6dp-rounded sims and lowest-cell tie-break
+    # as _cell_of (the kmeans_iters=0 variant has an exact DuckDB oracle —
+    # queries.py ann_ivf_topk recomputes the hash-sampled centroids
+    # relationally)
     @F.pandas_udf(ArrayType(IntegerType()))
     def probe_cells(vecs: pd.Series) -> pd.Series:
         if not len(vecs):
@@ -411,7 +411,7 @@ def ivf_topk(
 
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("vc")
-    ).withColumn("cell", cell_of(F.col("vc")))
+    ).withColumn("cell", _cell_of(centroids)(F.col("vc")))
     q = (
         queries.select(F.col(id_col).alias("query_id"), _as_double(vec_col).alias("vq"))
         .withColumn("cell", F.explode(probe_cells(F.col("vq"))))

@@ -24,7 +24,6 @@ import time
 from dataclasses import dataclass
 from datetime import datetime
 from functools import reduce
-from operator import and_
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -36,10 +35,17 @@ from pyspark.sql.types import (
 
 from german_newspaper_crawler_spark import schemas
 from german_newspaper_crawler_spark.functions import hashing
-from german_newspaper_crawler_spark.functions.urls import href_valid
+from german_newspaper_crawler_spark.functions.urls import href_valid, urljoin_udf
 from german_newspaper_crawler_spark.operators import frontier as FR
 from german_newspaper_crawler_spark.sources.fetch import Fetcher, fetch_stage
 from german_newspaper_crawler_spark.sources.store import SnapshotStore
+
+
+# G6 in the crawl: suppress fetched images whose pHash is within this hamming
+# radius of any previously ACCEPTED image (persistent seen_phash side table)
+# or of an earlier image in the same batch — the distributed generalization
+# of the reference's post-fetch exact-hash skip (web_requests.py:182-193)
+PHASH_MAX_HAMMING = 4
 
 
 @dataclass
@@ -63,12 +69,6 @@ class CrawlConfig:
     use_bloom: bool = False
     bloom_buckets: int = 16
     bloom_fpr: float = 0.01
-    # G6 in the crawl: suppress fetched images whose pHash is within this
-    # hamming radius of any previously ACCEPTED image (persistent seen_phash
-    # side table) or of an earlier image in the same batch — the distributed
-    # generalization of the reference's post-fetch exact-hash skip
-    # (web_requests.py:182-193). 0 falls back to exact-phash dedup only.
-    phash_max_hamming: int = 4
     pos_tag_cap: int = 50_000  # MAX_POS_TAG_ENTRIES (pos_tagging.py:13)
     pos_tag_skip: int = 200_000  # MAX_POS_TAG_TOKENS (pos_tagging.py:14)
     # fold accumulated frontier merge-deltas back into one base file set
@@ -150,12 +150,6 @@ def refill_from_anchors(
        against ``seen`` — anti-joins J1,
     4. first-occurrence dedup by (sel_rank, doc_pos) (W2),
     """
-    from german_newspaper_crawler_spark.functions.urls import urljoin_batch
-
-    @F.pandas_udf(StringType())
-    def urljoin_udf(bases: pd.Series, hrefs: pd.Series) -> pd.Series:
-        return urljoin_batch(bases, hrefs)
-
     cand = (
         anchors.withColumn("href", F.trim("href"))
         .where(href_valid("href"))
@@ -168,17 +162,8 @@ def refill_from_anchors(
             ),
         )
     )
-    sel = [F.col("content_hash").alias("h")]
-    if scope_col:  # U2 strict mode: a hash only skips same-scope anchors
-        sel.append(F.col(scope_col).alias("__scope"))
-    # no distinct: a semi/anti join's result ignores duplicate build rows,
-    # and a distinct would add a shuffle + aggregate over all of seen
-    seen_h = seen.select(*sel)
     for hcol in ("url_hash", "text_hash"):
-        cond = cand[hcol] == seen_h["h"]
-        if scope_col:
-            cond = cond & (cand[scope_col] == seen_h["__scope"])
-        cand = cand.join(seen_h, cond, "left_anti")
+        cand = _seen_join(cand, hcol, seen, "left_anti", scope_col)
     deduped = FR.first_occurrence_dedup(cand)
     return FR.anchors_to_frontier(deduped, round_no, cfg.n_buckets, kind="article")
 
@@ -412,97 +397,31 @@ def article_identity(df: DataFrame) -> DataFrame:
     )
 
 
-def skip_known(
-    articles: DataFrame,
-    seen: DataFrame,
-    blooms: DataFrame | None = None,
-    n_bloom_buckets: int = 16,
+def _seen_join(
+    df: DataFrame, hash_col: str, seen: DataFrame, how: str,
     scope_col: str | None = None,
 ) -> DataFrame:
-    """The three-variant known-hash skip (web_requests.py:182-193): drop the
-    row if content_hash OR url_hash OR text-content-hash is known.
+    """The one seen probe (J1, web_requests.py:182-193): ``df`` rows joined
+    on ``df[hash_col] == seen.content_hash``; ``how`` is ``"left_anti"``
+    (keep unknown rows) or ``"left_semi"`` (keep known rows).
 
     ``scope_col`` (U2 strict mode, web_requests.py:222-229): when set
-    (e.g. ``"domain"``), a hash only skips rows of the SAME scope value —
+    (e.g. ``"domain"``), a hash only matches rows of the SAME scope value —
     reproducing the reference's per-collection known_hashes replacement,
     where a cross-domain duplicate is re-processed.
 
-    NOTE: ``articles`` feeds TWO plan branches (the narrow probe and the
-    payload join-back), so an un-cached input recomputes its lineage twice —
-    callers cache the fetched batch first (run_crawl does; it is bounded by
-    the round's pop budget).
-
-    With ``blooms`` (G1 accelerator): rows whose three hash variants are all
-    provably-absent from the per-bucket Bloom filters bypass the exact
-    anti-joins entirely — at 10^10 frontier scale that is the overwhelmingly
-    common fresh-URL path, turning three shuffle anti-joins into a broadcast
-    blob test. Maybe-seen rows fall through to the exact check, so the final
-    set is always exact (the filter accelerates, never decides).
-
-    Residual-scan note (10^10 seen): the exact fallback still scans the seen
-    table's hash column (Spark's DPP does not prune the build side of a
-    LEFT ANTI — verified). If that column scan ever dominates, partition the
-    seen table by ``pmod(hash64(content_hash), K)`` (store.set_partition_spec)
-    and statically prune the read to the maybe-rows' buckets — the bucket-id
-    set is bounded by the constant K, so collecting it is bounded driver
-    state like ids.py's per-partition counts. Not wired here because the
-    bloom already shrinks the probe side to near-zero and the build-side
-    scan is one columnar column.
+    No build-side distinct: a semi/anti join's result ignores duplicate
+    seen rows, and a distinct would add a shuffle + aggregate over all of
+    seen. A NULL hash never matches, so it is never skipped.
     """
-    if blooms is not None:
-        from german_newspaper_crawler_spark.functions.hashing import hash64
-        from german_newspaper_crawler_spark.operators.bloom import bloom_prefilter
-
-        flagged = articles.withColumn("__maybe", F.lit(False))
-        for c in ["content_hash", "url_hash", "text_content_hash"]:
-            # bucket is a pure function of the probed digest (blooms are
-            # built the same way: hash-bucketed, uniform by construction)
-            probe = flagged.withColumn("__h", F.coalesce(F.col(c), F.lit("0" * 30)))
-            probed = bloom_prefilter(
-                probe, blooms, "__h",
-                F.pmod(hash64(F.col("__h")), F.lit(n_bloom_buckets)).cast("int"),
-            )
-            flagged = probed.withColumn(
-                "__maybe", F.col("__maybe") | F.col("maybe_seen")
-            ).drop("maybe_seen", "__h")
-        fresh = flagged.where(~F.col("__maybe")).drop("__maybe")
-        maybe = flagged.where(F.col("__maybe")).drop("__maybe")
-        # bloom "provably absent" is global, hence absent in every scope —
-        # conservative under strict mode too
-        return fresh.unionByName(skip_known(maybe, seen, scope_col=scope_col))
-
-    sel = [F.col("content_hash").alias("h")]
+    sel = [F.col("content_hash").alias("__seen_h")]
     if scope_col:
-        sel.append(F.col(scope_col).alias("__scope"))
+        sel.append(F.col(scope_col).alias("__seen_scope"))
     seen_h = seen.select(*sel)
-
-    # Narrow-probe, join-back-once. The drop decision is a pure function of
-    # the (content_hash, url_hash, text_content_hash[, scope]) tuple, so:
-    # (1) unpivot just those columns to (tuple, h) rows and ONE semi-join
-    # against seen — only ~100-byte keys shuffle; (2) anti-join the fat
-    # article rows (html_gz + text + figures) against the matched-tuple set,
-    # null-safe on every key. The hit set is tiny in steady state (popped
-    # urls already anti-joined the frontier's seen) — AQE broadcasts it and
-    # the payload never shuffles at all; worst case (refresh re-crawl) it is
-    # bounded by the round's pop budget and the payload shuffles ONCE
-    # instead of three times. A chained per-column anti-join would exchange
-    # + sort the full payload on three different keys (measured plan: 3×
-    # SortMergeJoin LeftAnti, each with its own fat-row Exchange).
-    key_cols = ["content_hash", "url_hash", "text_content_hash"]
+    cond = df[hash_col] == seen_h["__seen_h"]
     if scope_col:
-        key_cols.append(scope_col)
-    probe = articles.select(*key_cols).select(
-        *key_cols,
-        F.explode(
-            F.array("content_hash", "url_hash", "text_content_hash")
-        ).alias("__h"),
-    )
-    cond = probe["__h"] == seen_h["h"]
-    if scope_col:
-        cond = cond & (probe[scope_col] == seen_h["__scope"])
-    hits = probe.join(seen_h, cond, "left_semi").select(*key_cols).distinct()
-    back = [articles[c].eqNullSafe(hits[c]) for c in key_cols]
-    return articles.join(hits, reduce(and_, back), "left_anti")
+        cond = cond & (df[scope_col] == seen_h["__seen_scope"])
+    return df.join(seen_h, cond, how)
 
 
 def prefilter_known_urls(
@@ -510,8 +429,10 @@ def prefilter_known_urls(
     seen: DataFrame,
     scope_col: str | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """Pre-FETCH url-hash skip — the split form of skip_known's url_hash /
-    content_hash variants, applied to the pop batch BEFORE the fetch stage.
+    """Pre-FETCH url-hash skip — the first half of the reference's
+    three-variant known-hash skip (web_requests.py:182-193: drop the row if
+    content_hash OR url_hash OR text-content-hash is known), applied to the
+    pop batch BEFORE the fetch stage.
 
     For http(s) rows ``content_hash == url_hash == sha256(url)``
     (article_identity, §1.4), so a seen url-hash decides two of the three
@@ -521,11 +442,10 @@ def prefilter_known_urls(
     Non-http rows have ``url_hash`` NULL under the reference rule and are
     never skipped here (their content_hash is the text hash — post-fetch).
 
-    Combined with :func:`skip_known_text` the surviving set is EXACTLY
-    skip_known's (tests/test_fetch_politeness.py asserts the equivalence):
-    http rows probe {url_hash, url_hash, text_hash} there, {url_hash} here +
-    {text_hash} after; non-http rows probe {text_hash, —, text_hash} there,
-    {} here + {text_hash} after.
+    :func:`skip_known_text` probes the remaining variant after the fetch:
+    http rows probe {url_hash} here + {text_hash} after; non-http rows
+    {} here + {text_hash} after (tests/test_fetch_politeness.py pins the
+    surviving set).
 
     Returns ``(fresh, skipped)`` — callers record ``skipped`` urls with
     status -304 so the frontier marks them resolved without a fetch.
@@ -534,18 +454,11 @@ def prefilter_known_urls(
     is_http = F.col("url").startswith("http://") | F.col("url").startswith(
         "https://"
     )
-    sel = [F.col("content_hash").alias("h")]
-    if scope_col:
-        sel.append(F.col(scope_col).alias("__scope"))
-    seen_h = seen.select(*sel)
     probe = batch.withColumn(
         "__uh", F.when(is_http, F.sha2(F.col("url"), 256))
     )
-    cond = probe["__uh"] == seen_h["h"]
-    if scope_col:
-        cond = cond & (probe[scope_col] == seen_h["__scope"])
-    skipped = probe.join(seen_h, cond, "left_semi").drop("__uh")
-    fresh = probe.join(seen_h, cond, "left_anti").drop("__uh")
+    skipped = _seen_join(probe, "__uh", seen, "left_semi", scope_col).drop("__uh")
+    fresh = _seen_join(probe, "__uh", seen, "left_anti", scope_col).drop("__uh")
     return fresh, skipped
 
 
@@ -563,31 +476,20 @@ def skip_known_text(
     (AQE broadcasts the seen side when small).
 
     With ``blooms`` (G1), rows whose text hash is provably absent bypass
-    the exact join entirely — the overwhelmingly common fresh path.
+    the exact join entirely — the overwhelmingly common fresh path. The
+    bloom's "provably absent" is global, hence absent in every scope, so it
+    composes with strict scope.
     """
-    if blooms is not None:
-        from german_newspaper_crawler_spark.functions.hashing import hash64
-        from german_newspaper_crawler_spark.operators.bloom import bloom_prefilter
+    if blooms is None:
+        return _seen_join(articles, "text_content_hash", seen, "left_anti", scope_col)
+    from german_newspaper_crawler_spark.operators.bloom import split_maybe_seen
 
-        probe = articles.withColumn(
-            "__h", F.coalesce(F.col("text_content_hash"), F.lit("0" * 30))
-        )
-        probed = bloom_prefilter(
-            probe, blooms, "__h",
-            F.pmod(hash64(F.col("__h")), F.lit(n_bloom_buckets)).cast("int"),
-        )
-        fresh = probed.where(~F.col("maybe_seen")).drop("maybe_seen", "__h")
-        maybe = probed.where(F.col("maybe_seen")).drop("maybe_seen", "__h")
-        return fresh.unionByName(skip_known_text(maybe, seen, scope_col=scope_col))
-
-    sel = [F.col("content_hash").alias("h")]
-    if scope_col:
-        sel.append(F.col(scope_col).alias("__scope"))
-    seen_h = seen.select(*sel)
-    cond = articles["text_content_hash"] == seen_h["h"]
-    if scope_col:
-        cond = cond & (articles[scope_col] == seen_h["__scope"])
-    return articles.join(seen_h, cond, "left_anti")
+    fresh, maybe = split_maybe_seen(
+        articles, blooms, "text_content_hash", n_bloom_buckets
+    )
+    return fresh.unionByName(
+        _seen_join(maybe, "text_content_hash", seen, "left_anti", scope_col)
+    )
 
 
 # --- the driver loop -------------------------------------------------------------
@@ -724,10 +626,10 @@ def run_crawl(
             )
             new_frontier.append(refill)
 
-        # 2) articles → url-hash pre-skip → fused fetch+parse → identity →
-        #    text-hash skip → enrich → merge. The known-skip is SPLIT
-        #    (prefilter_known_urls + skip_known_text ≡ skip_known): known
-        #    urls never reach the fetch stage (status -304, state
+        # 2) articles → url-hash pre-skip → fused fetch+parse (identity
+        #    hashes computed in-stage) → text-hash skip → enrich → merge. The
+        #    known-skip is SPLIT (prefilter_known_urls + skip_known_text):
+        #    known urls never reach the fetch stage (status -304, state
         #    "skipped"), and the post-fetch check is one linear anti-join —
         #    the fetched batch has a single consumer chain.
         if n_kind.get("article"):
@@ -735,11 +637,9 @@ def run_crawl(
             art_fresh, art_skipped = prefilter_known_urls(
                 work.where(F.col("kind") == "article"), seen, scope_col=scope
             )
-            parsed = article_identity(
-                fetch_parse_articles_stage(
-                    art_fresh, fetcher, robots=round_robots, respect_delay=cfg.respect_delay,
-                    concurrency=cfg.fetch_concurrency,
-                )
+            parsed = fetch_parse_articles_stage(
+                art_fresh, fetcher, robots=round_robots, respect_delay=cfg.respect_delay,
+                concurrency=cfg.fetch_concurrency,
             ).cache()
             cached.append(parsed)
             status_parts.append(parsed.select("url", "status"))
@@ -776,18 +676,15 @@ def run_crawl(
                     fresh, cfg.tagger, cap=cfg.pos_tag_cap,
                     skip_tokens=cfg.pos_tag_skip,
                 )
+                # post-tag re-check (web_requests.py:205-211): a mutating
+                # tagger recomputes content_hash from the normalized text
+                enriched = _seen_join(enriched, "content_hash", seen, "left_anti", scope)
             else:
+                # the SQL tagger keeps content_hash, which is the url-hash
+                # (http rows, probed by prefilter_known_urls) or the text
+                # hash (other rows, probed by skip_known_text) against this
+                # same seen — a re-check here could drop nothing
                 enriched = enrich_pos_tags(fresh, cfg)
-            # post-tag re-check (web_requests.py:205-211) — whitespace tagger
-            # never mutates content_hash; kept as the same anti-join for parity
-            sel2 = [F.col("content_hash").alias("h")] + (
-                [F.col("domain").alias("__scope")] if scope else []
-            )
-            seen_h2 = seen.select(*sel2)
-            cond2 = enriched.content_hash == seen_h2["h"]
-            if scope:
-                cond2 = cond2 & (enriched.domain == seen_h2["__scope"])
-            enriched = enriched.join(seen_h2, cond2, "left_anti")
             parsed_ts = cfg.parsed_ts or datetime.utcnow()
             from german_newspaper_crawler_spark.operators.ids import assign_ids
 
@@ -845,19 +742,14 @@ def run_crawl(
                         F.col("seq").alias("doc_pos"),
                     )
                 )
-                from german_newspaper_crawler_spark.functions.urls import urljoin_batch
-
-                @F.pandas_udf(StringType())
-                def uj(bases: pd.Series, hrefs: pd.Series) -> pd.Series:
-                    return urljoin_batch(bases, hrefs)
-
-                figs = figs.withColumn("abs_url", uj(F.col("url"), F.col("href")))
+                figs = figs.withColumn("abs_url", urljoin_udf(F.col("url"), F.col("href")))
                 figs = FR.first_occurrence_dedup(figs)
                 new_frontier.append(
                     FR.anchors_to_frontier(figs, rnd + 1, cfg.n_buckets, kind="image")
                 )
 
-        # 4) images → fused fetch+decode+phash → exact-phash dedup → append
+        # 4) images → fused fetch+decode+phash → pHash near-dup suppression
+        #    → append
         if n_kind.get("image"):
             img_out = fetch_images_stage(
                 work.where(F.col("kind") == "image"), fetcher, robots=round_robots,
@@ -868,47 +760,34 @@ def run_crawl(
             imgs = img_out.where(F.col("bytes").isNotNull()).select(
                 *[f.name for f in schemas.IMAGES.fields], "priority", "seq"
             )
-            if cfg.phash_max_hamming > 0:
-                from german_newspaper_crawler_spark.operators.dedup import (
-                    phash_suppress_near_dups,
-                )
+            from german_newspaper_crawler_spark.operators.dedup import (
+                phash_suppress_near_dups,
+            )
 
-                seen_ph = None
-                if store.exists("seen_phash"):
-                    seen_ph = store.read(spark, "seen_phash")
-                elif store.exists("images"):
-                    # migrate an exact-dedup-era store: bootstrap the narrow
-                    # side table from the accepted images' phashes once
-                    seen_ph = store.read(spark, "images").select(
-                        "phash", F.lit(round_ts).alias("added_at")
-                    ).distinct()
-                    store.append("seen_phash", seen_ph)
-                imgs = phash_suppress_near_dups(
-                    imgs, seen_ph, id_col="image_id", hash_col="phash",
-                    order_cols=["priority", "seq"],
-                    max_hamming=cfg.phash_max_hamming,
-                ).select(*[f.name for f in schemas.IMAGES.fields])
-            else:
-                if store.exists("images"):
-                    existing = store.read(spark, "images").select("phash").distinct()
-                    imgs = imgs.join(existing, "phash", "left_anti")
-                imgs = FR.first_occurrence_dedup(
-                    imgs.withColumn("sel_rank", F.col("priority"))
-                    .withColumn("doc_pos", F.col("seq")),
-                    url_col="phash",
-                ).select(*[f.name for f in schemas.IMAGES.fields])
-            imgs = imgs.cache()
+            seen_ph = None
+            if store.exists("seen_phash"):
+                seen_ph = store.read(spark, "seen_phash")
+            elif store.exists("images"):
+                # images without seen_phash: a store written before the side
+                # table existed, or a crash between the first round's images
+                # and seen_phash appends below. Either way, bootstrap the
+                # narrow side table from the accepted images' phashes once.
+                seen_ph = store.read(spark, "images").select(
+                    "phash", F.lit(round_ts).alias("added_at")
+                ).distinct()
+                store.append("seen_phash", seen_ph)
+            imgs = phash_suppress_near_dups(
+                imgs, seen_ph, id_col="image_id", hash_col="phash",
+                order_cols=["priority", "seq"], max_hamming=PHASH_MAX_HAMMING,
+            ).select(*[f.name for f in schemas.IMAGES.fields]).cache()
             cached.append(imgs)
             n_images = imgs.count()
             if n_images:
                 store.append("images", imgs)
-                if cfg.phash_max_hamming > 0:
-                    store.append(
-                        "seen_phash",
-                        imgs.select(
-                            "phash", F.lit(round_ts).alias("added_at")
-                        ).distinct(),
-                    )
+                store.append(
+                    "seen_phash",
+                    imgs.select("phash", F.lit(round_ts).alias("added_at")).distinct(),
+                )
 
         # 5) frontier state transitions + refill. State transitions go through
         # merge_delta (write ∝ popped-batch size, never a full-frontier

@@ -157,6 +157,7 @@ def test_image_invariants(spark, fixture_data, crawl_result):
     pHash duplicates suppressed."""
     from german_newspaper_crawler_spark.functions.codec import decode_image, psnr
     from german_newspaper_crawler_spark.functions.phash import phash64
+    from german_newspaper_crawler_spark.plans.crawl import PHASH_MAX_HAMMING
 
     seeds, pages, blobs, truth = fixture_data
     store, stats, cfg, _ = crawl_result
@@ -166,13 +167,13 @@ def test_image_invariants(spark, fixture_data, crawl_result):
     assert imgs["phash"].nunique() == len(imgs)
     # blobs of the deliberately-failed article (a5, status 500) are never
     # discovered; everything else is either accepted or a pHash near-dup
-    # (hamming <= cfg.phash_max_hamming) of an accepted image — the G6
+    # (hamming <= PHASH_MAX_HAMMING) of an accepted image — the G6
     # suppression the fixture plants deliberately (img/2_1 jpeg re-encode of
     # img/0_0, img/4_1 noise variant; both within hamming 2)
     reachable = {u: b for u, b in blobs.items() if "/img/5_" not in u}
     reach_ph = {u: phash64(decode_image(b)) for u, b in reachable.items()}
     accepted = list(imgs["phash"])
-    t_ham = cfg.phash_max_hamming
+    t_ham = PHASH_MAX_HAMMING
     # accepted set is pairwise separated (earlier-neighbor rule invariant)
     for i, pa in enumerate(accepted):
         for pb in accepted[i + 1:]:

@@ -246,15 +246,13 @@ def test_mutating_tagger_recomputes_hash_and_postcheck_drops(spark):
         "der", "gleiche", "text"
     ]
 
-    # post-tag re-check: the normalized hash is already in seen → dropped
-    from pyspark.sql import functions as F
+    # post-tag re-check through the crawl's seen probe: the normalized
+    # hash is already in seen → dropped
+    from german_newspaper_crawler_spark.plans.crawl import _seen_join
 
     seen = spark.createDataFrame([(sha("der gleiche text"),)], ["content_hash"])
     enriched = enrich_stage(df, _lowercase_tagger())
-    seen_h = seen.select(F.col("content_hash").alias("h")).distinct()
-    survived = enriched.join(
-        seen_h, enriched.content_hash == seen_h.h, "left_anti"
-    ).collect()
+    survived = _seen_join(enriched, "content_hash", seen, "left_anti").collect()
     assert {r["url"] for r in survived} == {"file:///archiv/a2"}
 
 

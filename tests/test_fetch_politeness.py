@@ -104,56 +104,58 @@ def test_crawl_with_bloom_matches_exact(spark, tmp_path):
 
 def test_bloom_composes_with_strict_scope(spark):
     """G1 × U2: the Bloom prefilter is global ("provably absent anywhere" ⇒
-    absent in every scope), so bloom-accelerated strict-scoped skip_known
-    equals the exact strict-scoped result."""
+    absent in every scope), so bloom-accelerated strict-scoped
+    skip_known_text equals the exact strict-scoped result."""
     import hashlib
 
     from german_newspaper_crawler_spark import schemas
-    from german_newspaper_crawler_spark.functions.hashing import hash64
-    from german_newspaper_crawler_spark.operators.bloom import build_bloom, params_for
-    from german_newspaper_crawler_spark.plans.crawl import skip_known
-    from pyspark.sql import functions as F
+    from german_newspaper_crawler_spark.operators.bloom import (
+        build_bloom, params_for, seen_bucket,
+    )
+    from german_newspaper_crawler_spark.plans.crawl import skip_known_text
 
     sha = lambda s: hashlib.sha256(s.encode()).hexdigest()  # noqa: E731
+    # the text hash is what seen holds; every 10th row has none (never
+    # skipped, and it probes the bloom as the null sentinel)
     arts = spark.createDataFrame(
-        [(sha(f"c{i}"), sha(f"u{i}"), sha(f"t{i}"), f"d{i % 2}") for i in range(60)],
-        ["content_hash", "url_hash", "text_content_hash", "domain"],
+        [
+            (sha(f"u{i}"), sha(f"t{i}") if i % 10 else None, f"d{i % 2}")
+            for i in range(60)
+        ],
+        "url string, text_content_hash string, domain string",
     )
     # seen: d0 knows hashes 0..19, d1 knows 10..29 → strict scope matters
     seen = spark.createDataFrame(
-        [(sha(f"c{i}"), "d0", None) for i in range(20)]
-        + [(sha(f"c{i}"), "d1", None) for i in range(10, 30)],
+        [(sha(f"t{i}"), "d0", None) for i in range(20)]
+        + [(sha(f"t{i}"), "d1", None) for i in range(10, 30)],
         schemas.SEEN,
     )
     m, k = params_for(100, 0.01)
-    blooms = build_bloom(
-        seen, "content_hash",
-        F.pmod(hash64("content_hash"), F.lit(4)).cast("int"), m, k,
-    )
-    exact = {r["content_hash"] for r in skip_known(arts, seen, scope_col="domain").collect()}
-    accel = {
-        r["content_hash"]
-        for r in skip_known(
-            arts, seen, blooms=blooms, n_bloom_buckets=4, scope_col="domain"
-        ).collect()
-    }
+    blooms = build_bloom(seen, "content_hash", seen_bucket("content_hash", 4), m, k)
+
+    def kept(**kw):
+        return {r["url"] for r in skip_known_text(arts, seen, **kw).collect()}
+
+    exact = kept(scope_col="domain")
+    accel = kept(blooms=blooms, n_bloom_buckets=4, scope_col="domain")
     assert accel == exact
     # and the strict result differs from global (scope genuinely engaged)
-    global_ = {r["content_hash"] for r in skip_known(arts, seen).collect()}
+    global_ = kept()
     assert exact != global_
 
 
 def test_split_skip_equals_skip_known(spark):
     """prefilter_known_urls (pre-fetch, url-hash) ∘ skip_known_text
-    (post-fetch, text-hash) must keep EXACTLY skip_known's surviving set —
-    including the corner cases: http url-hash hit (pre), text-hash hit on
-    an http row (post), non-http row whose sha256(url) happens to be seen
-    but whose text is fresh (must NOT be skipped — old rule never probes
-    url-hash for non-http), and plain fresh rows."""
+    (post-fetch, text-hash) must keep EXACTLY the reference's three-variant
+    skip set (web_requests.py:182-193: content_hash OR url_hash OR text
+    hash known) — including the corner cases: http url-hash hit (pre),
+    text-hash hit on an http row (post), non-http row whose sha256(url)
+    happens to be seen but whose text is fresh (must NOT be skipped — the
+    rule never probes url-hash for non-http), and plain fresh rows."""
     import hashlib
 
     from german_newspaper_crawler_spark.plans.crawl import (
-        prefilter_known_urls, skip_known, skip_known_text,
+        prefilter_known_urls, skip_known_text,
     )
 
     sha = lambda s: hashlib.sha256(s.encode()).hexdigest()  # noqa: E731
@@ -186,11 +188,10 @@ def test_split_skip_equals_skip_known(spark):
     seen_dup = seen.unionAll(seen).unionAll(seen.limit(2))
 
     for s in (seen, seen_dup):
-        want = {r["url"] for r in skip_known(arts, s).collect()}
         fresh_batch, skipped = prefilter_known_urls(arts, s)
         fresh_rows = fresh_batch.collect()
         got = {r["url"] for r in skip_known_text(fresh_batch, s).collect()}
-        assert got == want == {"https://h0/fresh-2", "ftp://h0/odd-2"}
+        assert got == {"https://h0/fresh-2", "ftp://h0/odd-2"}
         skipped_urls = [r["url"] for r in skipped.collect()]
         assert sorted(skipped_urls) == ["https://h0/known-url", "https://h1/both-known"]
         # each batch row lands in exactly one of the two outputs, once

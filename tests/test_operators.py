@@ -295,6 +295,24 @@ def test_prefix_filter_pairs_identical_to_plain_inverted_index(spark):
         assert want  # the fixture must actually produce pairs
 
 
+def test_connected_components_raises_at_cap_instead_of_partial_labels(spark):
+    """Min-label propagation needs about one iteration per unit of
+    diameter. A 25-node path cannot converge in the default 20 iterations:
+    it must raise, not return several "components" (the unconverged labels
+    split the path into 5). A 10-node path converges to one component."""
+    from german_newspaper_crawler_spark.operators.components import (
+        connected_components,
+    )
+
+    def path(n):
+        return spark.createDataFrame([(i, i + 1) for i in range(n - 1)], "a long, b long")
+
+    with pytest.raises(RuntimeError, match="still changing"):
+        connected_components(path(25))
+    labels = {r["id"]: r["component"] for r in connected_components(path(10)).collect()}
+    assert labels == {i: 0 for i in range(10)}
+
+
 def test_paragraph_dedup_ignores_null_paragraphs(spark):
     """A null array element must not hash to a shared null key (which would
     'dedup' every null against every other) nor count toward n_total."""

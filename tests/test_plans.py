@@ -98,25 +98,28 @@ def test_frontier_merge_on_read_broadcasts_delta(spark, tmp_path):
 
 
 def test_seen_anti_join_is_hash_join_not_nested_loop(spark):
-    """skip_known must be keyed joins only (no cartesian), AND the fat
-    article payload may appear in exactly ONE anti-join: the three hash
-    variants are probed via an unpivoted narrow semi-join against seen,
-    then the payload anti-joins the matched-tuple set once. Three chained
-    per-column anti-joins would exchange+sort the html_gz/text payload on
-    three different keys."""
-    from german_newspaper_crawler_spark.plans.crawl import skip_known
+    """The crawl's seen probes must be keyed equi-joins only (no cartesian,
+    no nested loop), with and without the strict-scope key, AND the fat
+    post-fetch article payload may appear in exactly ONE anti-join."""
+    from german_newspaper_crawler_spark.plans.crawl import (
+        prefilter_known_urls, skip_known_text,
+    )
 
+    batch = spark.range(1000).selectExpr(
+        "concat('https://h/', id) AS url", "'d' AS domain",
+    )
     arts = spark.range(1000).selectExpr(
         "concat('h', id) AS content_hash", "concat('u', id) AS url_hash",
         "concat('t', id) AS text_content_hash", "'d' AS domain",
     )
     seen = spark.range(100).selectExpr("concat('h', id) AS content_hash", "'d' AS domain")
     for scope in (None, "domain"):
-        plan = _plan_of(skip_known(arts, seen, scope_col=scope))
-        assert "CartesianProduct" not in plan, plan
-        assert "BroadcastNestedLoopJoin" not in plan, plan
-        assert plan.count("LeftAnti") == 1, plan
-        assert plan.count("LeftSemi") == 1, plan
+        fresh, skipped = prefilter_known_urls(batch, seen, scope_col=scope)
+        text_plan = _plan_of(skip_known_text(arts, seen, scope_col=scope))
+        for plan in (_plan_of(fresh), _plan_of(skipped), text_plan):
+            assert "CartesianProduct" not in plan, plan
+            assert "BroadcastNestedLoopJoin" not in plan, plan
+        assert text_plan.count("LeftAnti") == 1, text_plan
 
 
 def test_pack_sequences_has_no_window(spark):
