@@ -86,7 +86,7 @@ def crawl_stage_bench(spark, n_urls: int, n_partitions: int, reps: int = 1) -> d
     from german_newspaper_crawler_spark import schemas
     from german_newspaper_crawler_spark.operators.frontier import bucket_of, pop_batch
     from german_newspaper_crawler_spark.plans.crawl import (
-        CrawlConfig, article_identity, fetch_images_stage,
+        CrawlConfig, fetch_images_stage,
         fetch_parse_articles_stage, prefilter_known_urls, skip_known_text,
     )
 
@@ -128,10 +128,8 @@ def crawl_stage_bench(spark, n_urls: int, n_partitions: int, reps: int = 1) -> d
     def run_pipeline(fr):
         batch = pop_batch(fr.withColumn("round", F.lit(0)), None)
         fresh_batch, _skipped = prefilter_known_urls(batch, seen)
-        parsed = article_identity(
-            fetch_parse_articles_stage(
-                fresh_batch, synth_fetcher, n_partitions=n_partitions
-            )
+        parsed = fetch_parse_articles_stage(
+            fresh_batch, synth_fetcher, n_partitions=n_partitions
         )
         final = skip_known_text(parsed, seen)
         out = final.select(

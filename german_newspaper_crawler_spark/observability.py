@@ -15,7 +15,7 @@ bounding table size exactly like ``RotatingFileHandler``'s backupCount.
 
 Driver-side by design: log events are per-round driver decisions (counts,
 state transitions, refreshes) — a handful of rows per round, never per-URL.
-Per-row diagnostics stay IN the data (status columns, fetch_ms), which is
+Per-row outcomes stay IN the data (the frontier's state column), which is
 the scalable place for them.
 """
 

@@ -107,7 +107,7 @@ def build_bloom(
 def merge_bloom_tables(blooms: DataFrame) -> DataFrame:
     """Collapse multiple blob generations per bucket into one (OR)."""
 
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
+    def or_blobs(pdf: pd.DataFrame) -> pd.DataFrame:
         bits = np.frombuffer(pdf["blob"].iloc[0], np.uint8).copy()
         for blob in pdf["blob"].iloc[1:]:
             bits |= np.frombuffer(blob, np.uint8)
@@ -116,7 +116,7 @@ def merge_bloom_tables(blooms: DataFrame) -> DataFrame:
         out["n_items"] = [int(pdf["n_items"].sum())]
         return out
 
-    return blooms.groupBy("bucket").applyInPandas(merge, schema=BLOOM_SCHEMA)
+    return blooms.groupBy("bucket").applyInPandas(or_blobs, schema=BLOOM_SCHEMA)
 
 
 def bloom_prefilter(

@@ -9,8 +9,9 @@ of execution order. A naive ``row_number() OVER (ORDER BY ...)`` collapses to
 a single partition — unusable at 10^10 rows — so this is the classic
 two-phase assignment:
 
-1. range-partition + sort by the order key (persisted so the sampled range
-   bounds are computed once and reused),
+1. range-partition + sort by the order key (a local checkpoint, so the
+   sampled range bounds are computed once and both phases read the same
+   rows; Spark's ContextCleaner frees its blocks with the result),
 2. count rows per partition (tiny driver-side list, one long per partition),
 3. ``mapInPandas`` adds ``cumulative_offset[pid] + local position``.
 
@@ -24,7 +25,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
-from pyspark import StorageLevel
+
+def _range_sorted(df: DataFrame, key_cols: list[str], num_partitions: int | None) -> DataFrame:
+    """``df`` range-partitioned and sorted by ``key_cols``, each row tagged
+    with its partition id ``__pid``. Both functions below read it twice (a
+    per-partition aggregate, then the ``mapInPandas``), so they
+    local-checkpoint it."""
+    parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    return (
+        df.repartitionByRange(parts, *[F.col(c) for c in key_cols])
+        .sortWithinPartitions(*key_cols)
+        .withColumn("__pid", F.spark_partition_id())
+    )
 
 
 def assign_ids(
@@ -35,13 +47,7 @@ def assign_ids(
     num_partitions: int | None = None,
 ) -> DataFrame:
     """Assign dense ids ``offset+1, offset+2, ...`` in ``order_cols`` order."""
-    parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    ordered = (
-        df.repartitionByRange(parts, *[F.col(c) for c in order_cols])
-        .sortWithinPartitions(*order_cols)
-        .withColumn("__pid", F.spark_partition_id())
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    ordered = _range_sorted(df, order_cols, num_partitions).localCheckpoint()
     # one row per partition — safe to collect at any scale
     counts = {
         r["__pid"]: r["n"]
@@ -72,8 +78,7 @@ def assign_ids(
             out.insert(0, id_col, pd.Series(list(ids), index=out.index, dtype="int64"))
             yield out
 
-    result = ordered.mapInPandas(add_ids, schema=out_schema)
-    return result
+    return ordered.mapInPandas(add_ids, schema=out_schema)
 
 
 def grouped_cumsum(
@@ -108,20 +113,13 @@ def grouped_cumsum(
     duplicates adjacent, so a vectorized per-batch check plus a
     batch-boundary carry detects every violation worker-side).
     """
-    parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    ordered = (
-        df.repartitionByRange(
-            parts, F.col(group_col), *[F.col(c) for c in order_cols]
-        )
-        .sortWithinPartitions(group_col, *order_cols)
-        .withColumn("__pid", F.spark_partition_id())
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    ordered = _range_sorted(
+        df, [group_col, *order_cols], num_partitions
+    ).localCheckpoint()
     partials = (
         ordered.groupBy("__pid", group_col).agg(F.sum(value_col).alias("s")).collect()
     )
     if any(r[group_col] is None for r in partials):
-        ordered.unpersist(False)
         raise ValueError(
             f"grouped_cumsum: null values in group column {group_col!r} — "
             "filter them out or assign a sentinel group first"

@@ -218,21 +218,27 @@ def _det_centroids(
     return cents  # (n_lists, dim), unit norm
 
 
+def _centroid_sims(vecs: pd.Series, centroids: np.ndarray) -> np.ndarray:
+    """(len(vecs), n_centroids) cosine sims of each vector to each unit-norm
+    centroid, ROUNDED to 6dp — the cross-engine rule: with the rounding,
+    nearest-cell and probe order (ties to the lowest cell) are reproducible
+    by the DuckDB oracles, which recompute them relationally."""
+    if not len(vecs):  # empty Arrow batch → np.asarray([]) is 1-D
+        return np.zeros((0, len(centroids)))
+    m = np.asarray([np.asarray(v, dtype=np.float64) for v in vecs])
+    m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
+    return np.round(m @ centroids.T, 6)
+
+
 def _cell_of(centroids: np.ndarray):
-    """Pandas UDF: vector → index of its nearest centroid (cosine). Sims
-    are ROUNDED to 6dp before the argmax, whose ties go to the lowest cell,
-    so cell assignment is reproducible across engines (the DuckDB oracles
-    recompute it relationally)."""
+    """Pandas UDF: vector → index of its nearest centroid (cosine, rounded
+    as :func:`_centroid_sims`; argmax ties go to the lowest cell)."""
     from pyspark.sql.types import IntegerType
 
     @F.pandas_udf(IntegerType())
     def cell_of(vecs: pd.Series) -> pd.Series:
-        if not len(vecs):  # empty Arrow batch → np.asarray([]) is 1-D
-            return pd.Series([], dtype="int32")
-        m = np.asarray([np.asarray(v, dtype=np.float64) for v in vecs])
-        m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-        sims = np.round(m @ centroids.T, 6)
-        return pd.Series(sims.argmax(axis=1).astype("int32"))
+        cells = _centroid_sims(vecs, centroids).argmax(axis=1)
+        return pd.Series(cells.astype("int32"))
 
     return cell_of
 
@@ -395,19 +401,15 @@ def ivf_topk(
 
     centroids = _det_centroids(corpus, id_col, vec_col, n_lists, kmeans_iters)
 
-    # probe order uses the same 6dp-rounded sims and lowest-cell tie-break
-    # as _cell_of (the kmeans_iters=0 variant has an exact DuckDB oracle —
-    # queries.py ann_ivf_topk recomputes the hash-sampled centroids
+    # probe order: the same rounded sims as _cell_of, stable-sorted so ties
+    # go to the lowest cell (the kmeans_iters=0 variant has an exact DuckDB
+    # oracle — queries.py ann_ivf_topk recomputes the hash-sampled centroids
     # relationally)
     @F.pandas_udf(ArrayType(IntegerType()))
     def probe_cells(vecs: pd.Series) -> pd.Series:
-        if not len(vecs):
-            return pd.Series([], dtype=object)
-        m = np.asarray([np.asarray(v, dtype=np.float64) for v in vecs])
-        m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-        sims = np.round(m @ centroids.T, 6)
+        sims = _centroid_sims(vecs, centroids)
         order = np.argsort(-sims, axis=1, kind="stable")[:, :n_probe].astype("int32")
-        return pd.Series(list(order))
+        return pd.Series(list(order), dtype=object)
 
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("vc")

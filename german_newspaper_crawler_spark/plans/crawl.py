@@ -14,7 +14,7 @@ Stage map (reference → here):
   hash skip (web_requests.py:182-193)          → seen anti-joins (J1)
   pos_tag_object (pos_tagging.py:169-227)      → enrich_pos_tags (SQL) or
                                                  operators.enrichment.enrich_stage
-  upsert_article (mongodb.py:83-157)           → store.merge on content_hash
+  upsert_article (mongodb.py:83-157)           → store.merge_delta on content_hash
   known_hashes.add (web_requests.py:218-219)   → store.append('seen', ...)
 """
 
@@ -46,6 +46,20 @@ from german_newspaper_crawler_spark.sources.store import SnapshotStore
 # or of an earlier image in the same batch — the distributed generalization
 # of the reference's post-fetch exact-hash skip (web_requests.py:182-193)
 PHASH_MAX_HAMMING = 4
+# G2: a host's robots rules are re-fetched once they are this old
+ROBOTS_TTL_HOURS = 24
+# G1: target false-positive rate of the seen-set Bloom filters
+BLOOM_FPR = 0.01
+# after each compaction, expire unreferenced snapshot dirs beyond this
+# time-travel window (Iceberg expire_snapshots cadence)
+EXPIRE_KEEP_LAST = 20
+# run-log retention (reference logging.retentions_day analog): the logs
+# table is rotated down to this many snapshots at run end
+LOG_KEEP_SNAPSHOTS = 500
+# G4+ authority_priority: host_rank is refreshed every this many rounds,
+# with this many PageRank iterations
+AUTHORITY_REFRESH_EVERY = 2
+AUTHORITY_ITERATIONS = 3
 
 
 @dataclass
@@ -59,28 +73,21 @@ class CrawlConfig:
     # per-partition cross-host fetch concurrency (reference library path
     # max_workers=8, parallel_fetcher.py:45); politeness stays per-host
     fetch_concurrency: int = 1
-    # G2: maintain the robots table (TTL cache) per round instead of a
-    # caller-provided dict; robots.txt fetched through the same fetcher
+    # G2: maintain the robots table (TTL cache) per round and enforce its
+    # rules; robots.txt fetched through the same fetcher. Off: every host is
+    # fetched unrestricted, as the reference does
     use_robots_table: bool = False
-    robots_ttl_hours: int = 24
     # G1 accelerator: Bloom-prefilter the seen-set checks (exact anti-join
     # remains the authority). Pays off when the seen set is huge relative to
     # the per-round batch (the 10^10 regime); off by default at fixture scale.
     use_bloom: bool = False
     bloom_buckets: int = 16
-    bloom_fpr: float = 0.01
     pos_tag_cap: int = 50_000  # MAX_POS_TAG_ENTRIES (pos_tagging.py:13)
     pos_tag_skip: int = 200_000  # MAX_POS_TAG_TOKENS (pos_tagging.py:14)
     # fold accumulated frontier merge-deltas back into one base file set
     # every N rounds (Iceberg rewrite_data_files cadence); keeps the
     # merge-on-read delta chain short without per-round full rewrites
     compact_every: int = 8
-    # after compaction, expire unreferenced snapshot dirs beyond this time-
-    # travel window (Iceberg expire_snapshots cadence); None keeps all
-    expire_keep_last: int | None = 20
-    # run-log retention (reference logging.retentions_day analog): rotate
-    # the logs table down to this many snapshots at run end; 0 disables
-    log_keep_snapshots: int = 500
     # T2 recurring-crawl semantics: re-enqueue the seed listing pages even
     # when a frontier already exists (the reference is re-run on a schedule
     # and always starts from the config seeds, scr:76). Article/image rows
@@ -99,14 +106,12 @@ class CrawlConfig:
     # motivation: at 10^10 URLs link authority decides which hosts deserve
     # fetch budget; the reference's priority is selector rank only,
     # taz.py:188-206). When on, a host_rank table is refreshed from the
-    # OBSERVED host graph every authority_refresh_every rounds (write via
+    # OBSERVED host graph every AUTHORITY_REFRESH_EVERY rounds (write via
     # merge_delta ∝ ranked hosts) and pop order becomes (selector rank,
     # pagerank bucket, seq) — which shifts budget toward high-authority
     # hosts whenever round_budget caps the per-round batch. Off by default:
     # the flag-off pop is bit-identical to reference parity (o4 oracle).
     authority_priority: bool = False
-    authority_refresh_every: int = 2
-    authority_iterations: int = 3
     # global cap on rows popped per round (None = uncapped). Exact top-k by
     # the pop order via TakeOrderedAndProject — with authority_priority this
     # is the lever that reallocates fetch budget across hosts.
@@ -205,7 +210,6 @@ _ARTICLE_SCHEMA = StructType(
 def fetch_parse_articles_stage(
     batch: DataFrame,
     fetcher,
-    robots: dict | None = None,
     respect_delay: bool = False,
     n_partitions: int | None = None,
     concurrency: int = 1,
@@ -254,15 +258,14 @@ def fetch_parse_articles_stage(
         return rows
 
     return fetch_stage(
-        batch, fetcher, robots, respect_delay, n_partitions, concurrency,
-        schema=_ARTICLE_SCHEMA, to_rows=to_rows,
+        batch, fetcher, _ARTICLE_SCHEMA, to_rows,
+        respect_delay, n_partitions, concurrency,
     )
 
 
 def fetch_parse_listings_stage(
     batch: DataFrame,
     fetcher,
-    robots: dict | None = None,
     respect_delay: bool = False,
     n_partitions: int | None = None,
     concurrency: int = 1,
@@ -282,8 +285,8 @@ def fetch_parse_listings_stage(
         return rows
 
     return fetch_stage(
-        batch, fetcher, robots, respect_delay, n_partitions, concurrency,
-        schema=_ANCHOR_SCHEMA, to_rows=to_rows,
+        batch, fetcher, _ANCHOR_SCHEMA, to_rows,
+        respect_delay, n_partitions, concurrency,
     )
 
 
@@ -301,7 +304,6 @@ _IMAGE_OUT = StructType(
 def fetch_images_stage(
     batch: DataFrame,
     fetcher,
-    robots: dict | None = None,
     respect_delay: bool = False,
     n_partitions: int | None = None,
     concurrency: int = 1,
@@ -340,8 +342,8 @@ def fetch_images_stage(
         return rows
 
     return fetch_stage(
-        batch, fetcher, robots, respect_delay, n_partitions, concurrency,
-        schema=_IMAGE_OUT, to_rows=to_rows,
+        batch, fetcher, _IMAGE_OUT, to_rows,
+        respect_delay, n_partitions, concurrency,
     )
 
 
@@ -381,22 +383,6 @@ def enrich_pos_tags(df: DataFrame, cfg: CrawlConfig) -> DataFrame:
 
 # --- seen-set + articles commit -------------------------------------------------
 
-def article_identity(df: DataFrame) -> DataFrame:
-    """content_hash per §1.4: url-hash wins for http(s) urls, stripped
-    text/html hash otherwise (object_model.py:195-214).
-
-    The fused fetch+parse stage already computes the hashes python-side over
-    the raw strings (bit-identical to sha2) — this is then a no-op; the JVM
-    path remains for callers holding raw html columns."""
-    if "content_hash" in df.columns:
-        return df
-    return df.withColumn(
-        "content_hash", hashing.content_hash("url", "text", "html")
-    ).withColumn("url_hash", hashing.url_hash("url")).withColumn(
-        "text_content_hash", hashing.text_hash("text", "html")
-    )
-
-
 def _seen_join(
     df: DataFrame, hash_col: str, seen: DataFrame, how: str,
     scope_col: str | None = None,
@@ -434,8 +420,8 @@ def prefilter_known_urls(
     content_hash OR url_hash OR text-content-hash is known), applied to the
     pop batch BEFORE the fetch stage.
 
-    For http(s) rows ``content_hash == url_hash == sha256(url)``
-    (article_identity, §1.4), so a seen url-hash decides two of the three
+    For http(s) rows ``content_hash == url_hash == sha256(url)`` (§1.4,
+    :func:`hashing.url_hash`), so a seen url-hash decides two of the three
     skip variants from the url alone: the row is dropped here and the fetch
     never happens — at 10^10-frontier scale this is the difference between
     re-downloading every refresh-crawl page and touching only new content.
@@ -451,12 +437,7 @@ def prefilter_known_urls(
     status -304 so the frontier marks them resolved without a fetch.
     ``batch`` feeds both outputs; run_crawl's pop batch is already cached.
     """
-    is_http = F.col("url").startswith("http://") | F.col("url").startswith(
-        "https://"
-    )
-    probe = batch.withColumn(
-        "__uh", F.when(is_http, F.sha2(F.col("url"), 256))
-    )
+    probe = batch.withColumn("__uh", hashing.url_hash("url"))
     skipped = _seen_join(probe, "__uh", seen, "left_semi", scope_col).drop("__uh")
     fresh = _seen_join(probe, "__uh", seen, "left_anti", scope_col).drop("__uh")
     return fresh, skipped
@@ -510,7 +491,6 @@ def run_crawl(
     seeds: DataFrame,
     fetcher: Fetcher,
     cfg: CrawlConfig | None = None,
-    robots: dict | None = None,
     run_id: str = "run-0",
 ) -> dict:
     """Run crawl rounds until the frontier drains or max_rounds is hit.
@@ -557,11 +537,11 @@ def run_crawl(
             # through the same keyed-delta path as every other table —
             # write ∝ ranked hosts, never a frontier-sized rewrite
             if (
-                rnd % max(cfg.authority_refresh_every, 1) == 0
+                rnd % AUTHORITY_REFRESH_EVERY == 0
                 or not store.exists("host_rank")
             ):
                 ranks = FR.authority_from_frontier(
-                    frontier, iterations=cfg.authority_iterations
+                    frontier, iterations=AUTHORITY_ITERATIONS
                 )
                 if ranks is not None:
                     if store.exists("host_rank"):
@@ -589,7 +569,6 @@ def run_crawl(
         # distributed robots-fetch leg, and the rules come back onto the pop
         # batch via a broadcast join (VERDICT r1 #3).
         work = batch
-        round_robots = robots
         if cfg.use_robots_table:
             from german_newspaper_crawler_spark.operators.robots import (
                 attach_robots, refresh_robots_df,
@@ -598,7 +577,7 @@ def run_crawl(
             rules = refresh_robots_df(
                 spark, store, batch.select("host"), fetcher,
                 now=cfg.parsed_ts or datetime.utcnow(),
-                ttl_hours=cfg.robots_ttl_hours,
+                ttl_hours=ROBOTS_TTL_HOURS,
             )
             # a left join keeps every batch row: work has the kinds n_kind saw
             work = attach_robots(batch, rules).cache()
@@ -612,7 +591,7 @@ def run_crawl(
         # 1) listings → fused fetch+anchor-extract → frontier refill
         if n_kind.get("listing"):
             anchors = fetch_parse_listings_stage(
-                work.where(F.col("kind") == "listing"), fetcher, robots=round_robots,
+                work.where(F.col("kind") == "listing"), fetcher,
                 respect_delay=cfg.respect_delay, concurrency=cfg.fetch_concurrency,
             ).cache()
             cached.append(anchors)
@@ -638,7 +617,7 @@ def run_crawl(
                 work.where(F.col("kind") == "article"), seen, scope_col=scope
             )
             parsed = fetch_parse_articles_stage(
-                art_fresh, fetcher, robots=round_robots, respect_delay=cfg.respect_delay,
+                art_fresh, fetcher, respect_delay=cfg.respect_delay,
                 concurrency=cfg.fetch_concurrency,
             ).cache()
             cached.append(parsed)
@@ -657,7 +636,7 @@ def run_crawl(
                 # amortized capacity doublings — never per round (G1)
                 blooms = ensure_blooms(
                     spark, store, seen, n_buckets=cfg.bloom_buckets,
-                    fpr=cfg.bloom_fpr,
+                    fpr=BLOOM_FPR,
                 )
             # robots-blocked rows were never fetched → no article row;
             # failures (status 0/4xx/5xx) DO upsert with empty html
@@ -723,7 +702,7 @@ def run_crawl(
 
                     update_blooms(
                         spark, store, new_seen, n_buckets=cfg.bloom_buckets,
-                        fpr=cfg.bloom_fpr,
+                        fpr=BLOOM_FPR,
                     )
             # 3) figures → image frontier rows (resolved against article url)
             if cfg.extract_images:
@@ -752,7 +731,7 @@ def run_crawl(
         #    → append
         if n_kind.get("image"):
             img_out = fetch_images_stage(
-                work.where(F.col("kind") == "image"), fetcher, robots=round_robots,
+                work.where(F.col("kind") == "image"), fetcher,
                 respect_delay=cfg.respect_delay, concurrency=cfg.fetch_concurrency,
             ).cache()
             cached.append(img_out)
@@ -827,9 +806,8 @@ def run_crawl(
                 store.compact(spark, "frontier")
                 if store.exists("articles"):
                     store.compact(spark, "articles")
-                if cfg.expire_keep_last:
-                    store.expire_snapshots("frontier", keep_last=cfg.expire_keep_last)
-                    store.expire_snapshots("articles", keep_last=cfg.expire_keep_last)
+                store.expire_snapshots("frontier", keep_last=EXPIRE_KEEP_LAST)
+                store.expire_snapshots("articles", keep_last=EXPIRE_KEEP_LAST)
 
         metrics.append(
             {
@@ -855,8 +833,8 @@ def run_crawl(
         for df in cached:
             df.unpersist()
 
-    # G7: persist per-round lineage/metrics (per-partition fetch_ms detail
-    # lives in the FETCHED.fetch_ms column; this is the run-level rollup)
+    # G7: persist the per-round lineage/metrics rollup (per-row outcomes stay
+    # in the data: the frontier's state column)
     if metrics:
         rows = [
             (
@@ -871,8 +849,7 @@ def run_crawl(
                 fetched=total_fetched, articles=total_articles,
                 images=total_images)
     runlog.flush(spark)
-    if cfg.log_keep_snapshots:
-        runlog.rotate(keep_last=cfg.log_keep_snapshots)
+    runlog.rotate(keep_last=LOG_KEEP_SNAPSHOTS)
 
     return {
         "rounds": len(metrics),

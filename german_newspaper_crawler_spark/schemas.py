@@ -88,25 +88,6 @@ FRONTIER = StructType(
     ]
 )
 
-# Fetch-stage output (S5/S6 analog)
-FETCHED = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("host", StringType()),
-        StructField("bucket", IntegerType()),
-        StructField("priority", IntegerType()),
-        StructField("seq", LongType()),
-        StructField("kind", StringType()),
-        StructField("domain", StringType()),
-        StructField("base_url", StringType()),
-        StructField("anchor_text", StringType()),  # carries figcaption for kind=image
-        StructField("status", IntegerType()),
-        StructField("html", StringType()),
-        StructField("content", BinaryType()),
-        StructField("fetch_ms", LongType()),
-    ]
-)
-
 # URL-seen set (reference: Set[str] of sha256 hex hydrated from Mongo,
 # lib/common/mongodb.py:47-80).
 SEEN = StructType(

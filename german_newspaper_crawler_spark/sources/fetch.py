@@ -14,9 +14,11 @@ runs ``mapInPandas`` with:
 * politeness: per-host sequential fetch in (priority, seq) order with a
   crawl-delay token (partition-local state — exactly the reference's
   sequential loop, per host instead of global),
-* failure → status 0 / html "" (reference's log-and-continue wall),
-* per-partition metrics rows are emitted via an accumulator-free side
-  channel (the fetch_ms column) for the lineage table (G7).
+* failure → status 0 / html "" (reference's log-and-continue wall).
+
+Robots rules arrive only as the broadcast-joined ``__robots_*`` columns
+(``operators/robots.py::attach_robots``); a batch without them fetches
+every host unrestricted.
 
 The fetcher is injected (reference test seam, taz.py:149-157): tests pass a
 dict-backed fetcher; production passes :func:`http_fetcher`.
@@ -30,8 +32,6 @@ from collections.abc import Callable, Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import StructType
-
-from german_newspaper_crawler_spark import schemas
 
 # fetcher contract: url -> (status, html, content_bytes|None)
 Fetcher = Callable[[str], tuple[int, str, bytes | None]]
@@ -79,63 +79,73 @@ def _fetch_host_rows(
     urls: list[str],
     host: str,
     fetcher: Fetcher,
-    robots: dict[str, tuple[list[str], int]],
+    rule: tuple[list[str], list[str], int],
     respect_delay: bool,
     last_fetch: dict[str, float],
-) -> list[tuple[int, str, bytes | None, int]]:
+) -> list[tuple[int, str, bytes | None]]:
     """Strictly sequential fetch of one host's urls (the reference's per-URL
     loop, web_requests.py:127) with robots + crawl-delay enforcement.
 
-    Robots dict values are ``(disallow, delay_ms)`` or
-    ``(disallow, allow, delay_ms)``; resolution is longest-prefix-wins
-    (operators/robots.py:robots_blocked)."""
+    ``rule`` is the host's ``(disallow, allow, delay_ms)``; resolution is
+    longest-prefix-wins (operators/robots.py:robots_blocked)."""
     from german_newspaper_crawler_spark.operators.robots import robots_blocked
 
     out = []
-    rule = robots.get(host, ([], 0))
-    if len(rule) == 2:
-        dis, delay_ms = rule
-        allow: list[str] = []
-    else:
-        dis, allow, delay_ms = rule
+    dis, allow, delay_ms = rule
     for url in urls:
-        path = _path_of(url)
-        if robots_blocked(path, dis, allow):
-            out.append((-403, "", None, 0))  # robots-blocked, never fetched
+        if robots_blocked(_path_of(url), dis, allow):
+            out.append((-403, "", None))  # robots-blocked, never fetched
             continue
         if respect_delay and delay_ms:
             wait = last_fetch.get(host, 0) + delay_ms / 1000.0 - time.monotonic()
             if wait > 0:
                 time.sleep(wait)
-        t0 = time.monotonic()
         try:
             status, html, content = fetcher(url)
         except Exception:
             status, html, content = 0, "", None  # web_requests.py:129-133
         last_fetch[host] = time.monotonic()
         out.append(
-            (
-                status,
-                html if status == 200 else "",
-                content if status == 200 else None,
-                int((time.monotonic() - t0) * 1000),
-            )
+            (status, html if status == 200 else "", content if status == 200 else None)
         )
     return out
+
+
+_ALLOW_ALL: tuple[list[str], list[str], int] = ([], [], 0)
+
+
+def _host_rules(pdf: pd.DataFrame) -> dict[str, tuple[list[str], list[str], int]]:
+    """host → ``(disallow, allow, delay_ms)`` from the batch's robots columns;
+    hosts without a rules row (null columns) and batches without the
+    columns are allow-all with no delay."""
+    from german_newspaper_crawler_spark.operators.robots import ROBOTS_COLS
+
+    if ROBOTS_COLS[0] not in pdf.columns:
+        return {}
+    rr = pdf[["host", *ROBOTS_COLS]]
+    return {
+        h: (
+            list(dis) if dis is not None else [],
+            list(alw) if alw is not None else [],
+            0 if pd.isna(delay) else int(delay),
+        )
+        for h, dis, alw, delay in rr.drop_duplicates("host").itertuples(index=False)
+    }
 
 
 def fetch_pandas_batch(
     pdf: pd.DataFrame,
     fetcher: Fetcher,
-    robots: dict[str, tuple[list[str], int]],
     respect_delay: bool,
     last_fetch: dict[str, float],
     concurrency: int = 1,
 ) -> pd.DataFrame:
     """Fetch one Arrow batch (sorted per host by the explicit order key) with
-    robots + politeness enforcement. ``last_fetch`` is the caller's
-    partition-local politeness state. Returns pdf + status/html/content/
-    fetch_ms columns.
+    robots + politeness enforcement. Each host's rule comes from the
+    ``__robots_dis``/``__robots_allow``/``__robots_delay`` columns
+    (:func:`operators.robots.attach_robots`); without them every host is
+    allow-all with no delay. ``last_fetch`` is the caller's partition-local
+    politeness state. Returns pdf + status/html/content columns.
 
     ``concurrency`` > 1 fans hosts out over a thread pool (the reference's
     library path, parallel_fetcher.py:42-85 with max_workers=8) — each host
@@ -145,102 +155,73 @@ def fetch_pandas_batch(
     deliberately NOT reproduced: order is carried as data here).
     """
     pdf = pdf.sort_values(["host", "priority", "seq"], kind="mergesort")
-    if "__robots_dis" in pdf.columns:
-        # rules arrived as broadcast-joined columns (operators/robots.py
-        # attach_robots) — the scale path; the dict param covers injected
-        # static rules and tests
-        robots = dict(robots)
-        rr = pdf[["host", "__robots_dis", "__robots_allow", "__robots_delay"]]
-        for h, dis, alw, delay in rr.drop_duplicates("host").itertuples(index=False):
-            if dis is None and alw is None and pd.isna(delay):
-                continue  # no rules row for this host → allow-all default
-            robots[h] = (
-                list(dis) if dis is not None else [],
-                list(alw) if alw is not None else [],
-                0 if pd.isna(delay) else int(delay),
-            )
+    rules = _host_rules(pdf)
     host_groups: dict[str, list[int]] = {}
     urls = list(pdf["url"])
     for i, host in enumerate(pdf["host"]):
         host_groups.setdefault(host, []).append(i)
 
-    results: list[tuple[int, str, bytes | None, int] | None] = [None] * len(pdf)
+    def run_host(host_idx):
+        host, idxs = host_idx
+        return idxs, _fetch_host_rows(
+            [urls[i] for i in idxs], host, fetcher, rules.get(host, _ALLOW_ALL),
+            respect_delay, last_fetch,
+        )
+
+    results: list[tuple[int, str, bytes | None] | None] = [None] * len(pdf)
     if concurrency > 1 and len(host_groups) > 1:
         from concurrent.futures import ThreadPoolExecutor
 
-        def run_host(host_idx):
-            host, idxs = host_idx
-            return idxs, _fetch_host_rows(
-                [urls[i] for i in idxs], host, fetcher, robots, respect_delay, last_fetch
-            )
-
         with ThreadPoolExecutor(max_workers=concurrency) as pool:
-            for idxs, rows in pool.map(run_host, host_groups.items()):
-                for i, row in zip(idxs, rows):
-                    results[i] = row
+            fetched = list(pool.map(run_host, host_groups.items()))
     else:
-        for host, idxs in host_groups.items():
-            rows = _fetch_host_rows(
-                [urls[i] for i in idxs], host, fetcher, robots, respect_delay, last_fetch
-            )
-            for i, row in zip(idxs, rows):
-                results[i] = row
+        fetched = [run_host(hi) for hi in host_groups.items()]
+    for idxs, rows in fetched:
+        for i, row in zip(idxs, rows):
+            results[i] = row
 
     out = pdf.copy()
     out["status"] = pd.Series([r[0] for r in results], index=pdf.index, dtype="int32")
     out["html"] = pd.Series([r[1] for r in results], index=pdf.index, dtype=object)
     out["content"] = pd.Series([r[2] for r in results], index=pdf.index, dtype=object)
-    out["fetch_ms"] = pd.Series([r[3] for r in results], index=pdf.index, dtype="int64")
     return out
 
 
-def partition_by_bucket(batch: DataFrame, n_partitions: int | None = None) -> DataFrame:
-    """Repartition a pop batch so a host never spans partitions (politeness
-    is partition-local, G3)."""
-    parts = n_partitions or max(batch.sparkSession.sparkContext.defaultParallelism, 1)
-    return batch.repartition(parts, "bucket")
-
-
+# the pop-batch columns the fetch stage reads (plus any robots rule columns)
 BATCH_COLS = [
     "url", "host", "bucket", "priority", "seq", "kind",
     "domain", "base_url", "anchor_text",
 ]
 
 
-def stage_input(batch: DataFrame, n_partitions: int | None = None) -> DataFrame:
-    """Project a pop batch to the fetch-stage input columns (plus any
-    broadcast-joined robots rule columns) and co-locate hosts by bucket."""
-    cols = BATCH_COLS + [c for c in batch.columns if c.startswith("__robots_")]
-    return partition_by_bucket(batch.select(*cols), n_partitions)
-
-
 def fetch_stage(
     batch: DataFrame,
     fetcher: Fetcher,
-    robots: dict[str, tuple[list[str], int]] | None = None,
+    schema: StructType,
+    to_rows: Callable[[pd.DataFrame], list[tuple]],
     respect_delay: bool = False,
     n_partitions: int | None = None,
     concurrency: int = 1,
-    schema: StructType = schemas.FETCHED,
-    to_rows: Callable[[pd.DataFrame], list[tuple]] | None = None,
 ) -> DataFrame:
     """Run the fetch over a pop batch in ONE ``mapInPandas`` → ``schema`` rows.
 
-    ``robots`` maps host → (disallow_prefixes, crawl_delay_ms); it is a
-    broadcast-sized dict (one row per host seen this round — at 10^10 scale
-    this becomes a broadcast join against the robots table, same shape).
+    Robots rules are the batch's ``__robots_*`` columns, broadcast-joined by
+    :func:`operators.robots.attach_robots` (one short row per host, so the
+    rules scale with the batch, never with a driver-side dict); a batch
+    without them fetches unrestricted.
 
     ``to_rows`` turns each fetched pandas batch (the input columns plus
-    status/html/content/fetch_ms) into output tuples in ``schema`` field
-    order, inside the same Python worker; without it the fetched rows are
-    projected to ``schema`` (default :data:`schemas.FETCHED`). The fused
-    crawl stages (plans.crawl ``fetch_parse_*_stage``/``fetch_images_stage``)
-    parse there, so the multi-KB page payload crosses the JVM↔Python Arrow
-    boundary once instead of three times, which is what the throughput
-    scales with.
+    status/html/content) into output tuples in ``schema`` field order,
+    inside the same Python worker. The fused crawl stages (plans.crawl
+    ``fetch_parse_*_stage``/``fetch_images_stage``) parse there, so the
+    multi-KB page payload crosses the JVM↔Python Arrow boundary once
+    instead of three times, which is what the throughput scales with.
     """
-    robots = robots or {}
-    src = stage_input(batch, n_partitions)
+    # bucket is a pure function of host, so a host never spans partitions:
+    # politeness state is partition-local (G3)
+    cols = BATCH_COLS + [c for c in batch.columns if c.startswith("__robots_")]
+    parts = n_partitions or max(batch.sparkSession.sparkContext.defaultParallelism, 1)
+    src = batch.select(*cols).repartition(parts, "bucket")
     names = [f.name for f in schema.fields]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -248,9 +229,7 @@ def fetch_stage(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            f = fetch_pandas_batch(
-                pdf, fetcher, robots, respect_delay, last_fetch, concurrency
-            )
-            yield f[names] if to_rows is None else pd.DataFrame(to_rows(f), columns=names)
+            f = fetch_pandas_batch(pdf, fetcher, respect_delay, last_fetch, concurrency)
+            yield pd.DataFrame(to_rows(f), columns=names)
 
     return src.mapInPandas(run, schema=schema)

@@ -14,8 +14,8 @@ manifest-swap commit:
   Iceberg snapshot-checkpoint semantics the north rule requires).
 
 Appends add a snapshot dir to the live set; overwrites replace the live set;
-``merge`` rewrites the live set with MERGE semantics via
-:func:`operators.merge.merge_upsert`.
+``merge_delta`` adds a keyed delta dir that replaces same-key rows at read
+time (MERGE semantics without rewriting the table).
 
 Consistency note: commits are atomic PER TABLE (like Iceberg without a
 multi-table transaction). The crawl loop orders its writes so a crash
@@ -183,22 +183,6 @@ class SnapshotStore:
         m["snapshots"].append({"id": m["seq"], "dir": snap, "op": op, "ts": time.time(), "live": [snap]})
         self._commit(table, m)
         return m["seq"]
-
-    def merge(self, spark: SparkSession, table: str, batch: DataFrame, keys: list[str],
-              schema: StructType | None = None) -> int:
-        """MERGE INTO table USING batch ON keys — batch wins, else insert.
-
-        Iceberg performs this as a metadata-level rewrite of affected files;
-        here the live set is compacted into one snapshot (same result set).
-        """
-        from german_newspaper_crawler_spark.operators.merge import merge_upsert
-
-        if self.exists(table):
-            base = self.read(spark, table)
-            merged = merge_upsert(base, batch, keys)
-        else:
-            merged = batch
-        return self.overwrite(table, merged, op="merge")
 
     def merge_delta(self, table: str, batch: DataFrame, keys: list[str]) -> int:
         """Keyed MERGE that writes ONLY the batch (Iceberg merge-on-read /

@@ -11,13 +11,19 @@ import pytest
 from german_newspaper_crawler_spark.sources.fetch import fetch_pandas_batch
 
 
-def _batch(urls_hosts):
+def _batch(urls_hosts, rules):
+    """A fetch batch with each host's ``(disallow, allow, delay_ms)`` rule as
+    the ``__robots_*`` columns ``operators.robots.attach_robots`` joins on."""
+    hosts = [h for u, h in urls_hosts]
     return pd.DataFrame(
         {
             "url": [u for u, h in urls_hosts],
-            "host": [h for u, h in urls_hosts],
+            "host": hosts,
             "priority": [0] * len(urls_hosts),
             "seq": list(range(len(urls_hosts))),
+            "__robots_dis": [rules[h][0] for h in hosts],
+            "__robots_allow": [rules[h][1] for h in hosts],
+            "__robots_delay": [rules[h][2] for h in hosts],
         }
     )
 
@@ -34,11 +40,10 @@ def test_crawl_delay_enforced_per_host():
 
     pdf = _batch(
         [(f"https://slow.example/a{i}", "slow.example") for i in range(3)]
-        + [(f"https://fast.example/b{i}", "fast.example") for i in range(3)]
+        + [(f"https://fast.example/b{i}", "fast.example") for i in range(3)],
+        {"slow.example": ([], [], 120), "fast.example": ([], [], 0)},
     )
-    robots = {"slow.example": ([], 120), "fast.example": ([], 0)}
-    t0 = time.monotonic()
-    out = fetch_pandas_batch(pdf, fetcher, robots, respect_delay=True, last_fetch={})
+    out = fetch_pandas_batch(pdf, fetcher, respect_delay=True, last_fetch={})
     assert (out["status"] == 200).all()
     slow = stamps["slow.example"]
     gaps = [b - a for a, b in zip(slow, slow[1:])]
@@ -56,10 +61,11 @@ def test_robots_disallow_blocks_without_fetch():
 
     pdf = _batch(
         [("https://h.example/intern/secret", "h.example"),
-         ("https://h.example/public/a", "h.example")]
+         ("https://h.example/public/a", "h.example")],
+        {"h.example": (["/intern/"], [], 0)},
     )
     out = fetch_pandas_batch(
-        pdf, fetcher, {"h.example": (["/intern/"], 0)}, respect_delay=False, last_fetch={}
+        pdf, fetcher, respect_delay=False, last_fetch={}
     ).set_index("url")
     assert out.loc["https://h.example/intern/secret", "status"] == -403
     assert out.loc["https://h.example/public/a", "status"] == 200

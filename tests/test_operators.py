@@ -45,7 +45,7 @@ def test_store_snapshots_and_time_travel(spark, tmp_path):
     s2 = store.append("t", spark.createDataFrame([(2, "y")], ["k", "v"]))
     assert store.read(spark, "t").count() == 2
     assert store.read_at(spark, "t", s1).count() == 1  # time travel
-    s3 = store.merge(spark, "t", spark.createDataFrame([(2, "Y"), (3, "z")], ["k", "v"]), ["k"])
+    s3 = store.merge_delta("t", spark.createDataFrame([(2, "Y"), (3, "z")], ["k", "v"]), ["k"])
     got = {(r["k"], r["v"]) for r in store.read(spark, "t").collect()}
     assert got == {(1, "x"), (2, "Y"), (3, "z")}
     assert store.snapshot_id("t") == s3 == 3
@@ -731,7 +731,8 @@ def test_shingle_arrays_cache_guards_generate_filter_inlining(spark):
     "name",
     [
         "dedup_ngram_jaccard", "dedup_components_keepers", "dedup_containment",
-        "curation_pipeline", "text_tfidf_top_terms",
+        "curation_pipeline", "text_tfidf_top_terms", "pack_training_sequences",
+        "w1_a3_id_assignment", "crawl_fixture_e2e",
     ],
 )
 def test_materialized_intermediates_leave_no_cache(spark, name):

@@ -122,18 +122,29 @@ def test_seen_anti_join_is_hash_join_not_nested_loop(spark):
         assert text_plan.count("LeftAnti") == 1, text_plan
 
 
-def test_pack_sequences_has_no_window(spark):
+def test_pack_sequences_has_no_window(spark, monkeypatch):
     """pack_training_sequences must compile WITHOUT a Window operator: the
     per-source unbounded-preceding cumsum window serializes the dominant
     source (~all of a web corpus) onto one task. The two-phase
     grouped_cumsum (operators/ids.py) replaces it — range exchange +
-    mapInPandas, no Window node anywhere in the plan."""
+    mapInPandas, no Window node anywhere in the plan. The range exchange is
+    in the frame grouped_cumsum local-checkpoints, so it is inspected there,
+    before the checkpoint."""
     import __spark_entry__ as e
+    from german_newspaper_crawler_spark.operators import ids
 
+    range_sorted, ranged = ids._range_sorted, []
+
+    def spy(*args, **kwargs):
+        ranged.append(range_sorted(*args, **kwargs))
+        return ranged[-1]
+
+    monkeypatch.setattr(ids, "_range_sorted", spy)
     plan = _plan_of(e.queries()["pack_training_sequences"](spark, SF))
-    assert "Window" not in plan, plan
+    [pre] = [_plan_of(df) for df in ranged]
+    assert "Window" not in plan + pre, plan + pre
     assert "MapInPandas" in plan
-    assert "RangePartitioning" in plan or "rangepartitioning" in plan.lower()
+    assert "RangePartitioning" in pre or "rangepartitioning" in pre.lower()
 
 
 def test_grouped_cumsum_equals_window(spark):

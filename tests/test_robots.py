@@ -6,11 +6,17 @@ from __future__ import annotations
 from datetime import datetime
 
 import pytest
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from german_newspaper_crawler_spark.operators.robots import (
     attach_robots, parse_robots_txt, refresh_robots_df, robots_blocked,
 )
 from german_newspaper_crawler_spark.sources.store import SnapshotStore
+
+# the fetch stage's output in these tests: each row's url and fetch status
+STATUS = StructType(
+    [StructField("url", StringType()), StructField("status", IntegerType())]
+)
 
 TXT = """
 # comment
@@ -118,8 +124,9 @@ def test_refresh_robots_df_ttl_and_cache(spark, tmp_path):
 
 @pytest.mark.parametrize("concurrency", [1, 4])
 def test_attach_robots_enforced_in_fetch_stage(spark, concurrency):
-    """Rules arriving as broadcast-joined columns block rows exactly like the
-    dict path — the scale path end to end, sequential or host-parallel."""
+    """Rules arriving as broadcast-joined columns block disallowed rows
+    before any fetch — the scale path end to end, sequential or
+    host-parallel."""
     from german_newspaper_crawler_spark.sources.fetch import fetch_stage
 
     calls = []
@@ -147,8 +154,9 @@ def test_attach_robots_enforced_in_fetch_stage(spark, concurrency):
         # one partition: both hosts share a batch, so concurrency 4 takes the
         # host-parallel path
         for r in fetch_stage(
-            attach_robots(batch, rules), fetcher, n_partitions=1,
-            concurrency=concurrency,
+            attach_robots(batch, rules), fetcher, STATUS,
+            lambda f: list(zip(f["url"], f["status"])),
+            n_partitions=1, concurrency=concurrency,
         ).collect()
     }
     assert out["https://h.example/intern/s"] == -403
@@ -208,9 +216,8 @@ def test_robots_wildcard_and_anchor_rules():
 
 def test_attach_robots_crawl_delay_enforced(spark, tmp_path):
     """The broadcast-joined rules path also carries Crawl-delay: per-host
-    gaps are enforced inside the fetch stage exactly like the dict path."""
+    gaps are enforced inside the fetch stage."""
     import json
-    import time as _time
 
     from german_newspaper_crawler_spark.sources.fetch import fetch_stage
 
@@ -239,7 +246,8 @@ def test_attach_robots_crawl_delay_enforced(spark, tmp_path):
         "allow_prefixes array<string>, crawl_delay_ms int",
     )
     out = fetch_stage(
-        attach_robots(batch, rules), fetcher, respect_delay=True
+        attach_robots(batch, rules), fetcher, STATUS,
+        lambda f: list(zip(f["url"], f["status"])), respect_delay=True,
     ).collect()
     assert all(r["status"] == 200 for r in out)
     stamps = sorted(
