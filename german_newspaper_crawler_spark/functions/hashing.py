@@ -5,6 +5,12 @@ The reference's dedup identity is ``sha256(utf8(x)).hexdigest()``
 Spark's ``sha2(col, 256)`` produces the identical lowercase hex digest —
 bit-for-bit, verified by tests against ``hashlib``.
 
+The identity rule (url digest for http(s) rows, else digest of the stripped
+text or html) is stated twice, once per engine: :func:`content_hash` and its
+parts for JVM columns, :func:`identity_hashes` for Python workers (the fused
+article stage, the enrichment recompute, legacy normalization). A
+cross-engine property test holds the two to the reference recipe.
+
 ``hash64`` is the engine's shared 60-bit integer hash (first 15 hex chars of
 sha256 as a base-16 integer). It is deliberately definable in ANSI SQL so the
 DuckDB oracle can reproduce it exactly:
@@ -13,6 +19,8 @@ DuckDB oracle can reproduce it exactly:
 """
 
 from __future__ import annotations
+
+import hashlib
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -61,15 +69,23 @@ def url_hash(url_col: Column | str) -> Column:
     )
 
 
+# the 29 characters ``str.strip()`` strips (every ``str.isspace()`` code
+# point; the highest is U+3000); Spark's ``trim`` strips only the space
+_PY_WHITESPACE = "".join(c for c in map(chr, range(0x3001)) if c.isspace())
+
+
 def text_hash(text_col: Column | str, html_col: Column | str) -> Column:
-    """Content-hash fallback: sha256 of ``strip(text or html)``, NULL if empty.
+    """Content-hash fallback: sha256 of ``(text or html).strip()`` with
+    Python's whitespace set, NULL if empty.
 
     Reference: ``data = (text or html or '').strip()`` then sha256
     (``web_requests.py:156-175``, ``object_model.py:204-214``).
     """
     t = F.col(text_col) if isinstance(text_col, str) else text_col
     h = F.col(html_col) if isinstance(html_col, str) else html_col
-    data = F.trim(F.coalesce(F.nullif(t, F.lit("")), h, F.lit("")))
+    data = F.btrim(
+        F.coalesce(F.nullif(t, F.lit("")), h, F.lit("")), F.lit(_PY_WHITESPACE)
+    )
     return F.when(data != "", F.sha2(data, 256))
 
 
@@ -80,3 +96,20 @@ def content_hash(url_col, text_col, html_col) -> Column:
     wins; only urlless records hash their stripped text/html.
     """
     return F.coalesce(url_hash(url_col), text_hash(text_col, html_col))
+
+
+def identity_hashes(
+    url: str | None, text: str | None, html: str | None
+) -> tuple[str | None, str | None, str | None]:
+    """``(content_hash, url_hash, text_hash)`` of one row, in Python: the
+    same rule as :func:`content_hash`, :func:`url_hash` and :func:`text_hash`
+    for code that runs inside a Python worker."""
+
+    def sha(s: str) -> str:
+        return hashlib.sha256(s.encode("utf-8")).hexdigest()
+
+    is_http = isinstance(url, str) and url.startswith(("http://", "https://"))
+    u = sha(url) if is_http else None
+    data = (text or html or "").strip()
+    t = sha(data) if data else None
+    return (u if is_http else t), u, t

@@ -36,6 +36,12 @@ from pyspark.sql.types import (
 
 from german_newspaper_crawler_spark.functions.hashing import hash64
 
+# The seen-set filters' bucket count and target false-positive rate. The
+# bucket count is part of the persisted ``blooms`` table — a digest probes
+# the blob of bucket ``seen_bucket(h)`` — so it is fixed here, never passed.
+SEEN_BUCKETS = 16
+SEEN_FPR = 0.01
+
 BLOOM_SCHEMA = StructType(
     [
         StructField("bucket", IntegerType(), False),
@@ -162,22 +168,22 @@ def bloom_prefilter(
     ).drop("blob", "k", "m", "n_items", "__bucket")
 
 
-def seen_bucket(hash_col: Column | str, n_buckets: int) -> Column:
-    """The seen-set bucket of a digest: ``pmod(hash64(h), n_buckets)``.
+def seen_bucket(hash_col: Column | str) -> Column:
+    """The seen-set bucket of a digest: ``pmod(hash64(h), SEEN_BUCKETS)``.
     The builders and :func:`split_maybe_seen` share it, so a probed digest
     always meets the blob its own insert went to."""
-    return F.pmod(hash64(hash_col), F.lit(n_buckets)).cast("int")
+    return F.pmod(hash64(hash_col), F.lit(SEEN_BUCKETS)).cast("int")
 
 
 def split_maybe_seen(
-    df: DataFrame, blooms: DataFrame, hash_col: str, n_buckets: int
+    df: DataFrame, blooms: DataFrame, hash_col: str
 ) -> tuple[DataFrame, DataFrame]:
     """``(fresh, maybe)``: rows whose ``hash_col`` digest is provably absent
     from the seen-set blooms, and rows that must fall through to the exact
     seen join. A NULL digest probes as the ``"0"*30`` hex sentinel; either
     half keeps such a row, since NULL never matches the exact join."""
     probe = df.withColumn("__h", F.coalesce(F.col(hash_col), F.lit("0" * 30)))
-    probed = bloom_prefilter(probe, blooms, "__h", seen_bucket("__h", n_buckets))
+    probed = bloom_prefilter(probe, blooms, "__h", seen_bucket("__h"))
     fresh = probed.where(~F.col("maybe_seen")).drop("maybe_seen", "__h")
     maybe = probed.where(F.col("maybe_seen")).drop("maybe_seen", "__h")
     return fresh, maybe
@@ -194,8 +200,7 @@ def ensure_blooms(
     store,
     seen: DataFrame,
     hash_col: str = "content_hash",
-    n_buckets: int = 16,
-    fpr: float = 0.01,
+    fpr: float = SEEN_FPR,
 ) -> DataFrame | None:
     """Persistent incremental Bloom maintenance (G1 at the 10^10 regime).
 
@@ -210,9 +215,9 @@ def ensure_blooms(
     sized for (then at 2× headroom) — amortized O(1) scans, like a growing
     hash table.
 
+    Blobs are bucketed by :func:`seen_bucket` (``SEEN_BUCKETS`` buckets).
     Returns the merged per-bucket blobs, or None when there is nothing yet.
     """
-    bucket = seen_bucket(hash_col, n_buckets)
     existing = store.read(spark, "blooms", BLOOM_SCHEMA) if store.exists("blooms") else None
     if existing is not None:
         head = existing.select("m", "k").first()
@@ -227,7 +232,7 @@ def ensure_blooms(
     if not n_seen:
         return None
     m, k = params_for(max(2 * n_seen, 4096), fpr)
-    blobs = build_bloom(seen, hash_col, bucket, m, k)
+    blobs = build_bloom(seen, hash_col, seen_bucket(hash_col), m, k)
     store.overwrite("blooms", blobs, op="bloom-rebuild")
     return merge_bloom_tables(store.read(spark, "blooms"))
 
@@ -237,14 +242,13 @@ def update_blooms(
     store,
     new_hashes: DataFrame,
     hash_col: str = "content_hash",
-    n_buckets: int = 16,
-    fpr: float = 0.01,
+    fpr: float = SEEN_FPR,
 ) -> None:
     """Append same-(m,k) delta blobs for this round's NEW hashes — write and
     scan ∝ batch size. Bootstraps the base filter from the first batch when
     the table doesn't exist yet (sized with generous headroom at the
     configured ``fpr``; :func:`ensure_blooms` re-sizes on overflow later)."""
-    bucket = seen_bucket(hash_col, n_buckets)
+    bucket = seen_bucket(hash_col)
     head = (
         store.read(spark, "blooms").select("m", "k").first()
         if store.exists("blooms")

@@ -20,21 +20,23 @@ Spark formulation: ONE ``mapInPandas`` stage —
   (MAX_POS_TAG_TOKENS) → empty ``pos_taggs``;
 * taggers may implement ``normalize(text) -> text`` (content-mutating
   enrichment); the stage then rewrites ``text`` and recomputes
-  ``text_content_hash`` / non-http ``content_hash`` per the identity rule
-  (``web_requests.py:159-175``), which is what makes the caller's post-tag
+  ``text_content_hash`` / non-http ``content_hash`` with
+  :func:`functions.hashing.identity_hashes` (the identity rule,
+  ``web_requests.py:159-175``), which is what makes the caller's post-tag
   hash re-check (:205-211) able to fire.
 
 The production in-container tagger is :class:`WhitespaceTagger` (the
 reference's spaCy-less fallback, pos_tagging.py:108-116); the pure-SQL
-``plans.crawl.enrich_pos_tags`` computes the identical result JVM-side and
-remains the default crawl path. :class:`SpacyTagger` is the deployment slot:
+``plans.crawl.enrich_pos_tags`` computes the identical result JVM-side, takes
+the same ``cap`` / ``skip_tokens`` arguments with the same defaults
+(``MAX_POS_TAG_ENTRIES`` / ``MAX_POS_TAG_TOKENS`` below), and remains the
+default crawl path. :class:`SpacyTagger` is the deployment slot:
 this container has no spaCy, so it raises ImportError at load — the stage
 shape (cache, chunking, caps, re-check) is what's tested here.
 """
 
 from __future__ import annotations
 
-import hashlib
 from typing import Iterator
 
 import pandas as pd
@@ -42,6 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import ArrayType, StructField, StructType
 
 from german_newspaper_crawler_spark import schemas
+from german_newspaper_crawler_spark.functions.hashing import identity_hashes
 from german_newspaper_crawler_spark.functions.text import chunk_text_by_paragraphs
 
 # pos_tagging.py:12-16
@@ -154,10 +157,6 @@ def enrich_stage(
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         model = _load_cached(tagger)  # once per worker, cached across batches
-
-        def sha(s: str) -> str:
-            return hashlib.sha256(s.encode("utf-8")).hexdigest()
-
         for pdf in batches:
             taggs, texts = [], []
             new_text_hash, new_content_hash = [], []
@@ -174,15 +173,13 @@ def enrich_stage(
                     continue
                 if normalize is not None:
                     text = normalize(text)
-                    data = text.strip()
-                    th = sha(data) if data else None
-                    is_http = url.startswith(("http://", "https://"))
-                    new_text_hash.append(th)
                     # identity rule web_requests.py:159-175: content_hash is
                     # the url-hash for http rows (unchanged by mutation) and
                     # the text-hash otherwise — the case the post-tag
                     # re-check exists for
-                    new_content_hash.append(sha(url) if is_http else th)
+                    ch, _, th = identity_hashes(url, text, None)
+                    new_text_hash.append(th)
+                    new_content_hash.append(ch)
                 else:
                     new_text_hash.append(None)
                     new_content_hash.append(None)

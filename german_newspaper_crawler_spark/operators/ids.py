@@ -13,9 +13,12 @@ two-phase assignment:
    sampled range bounds are computed once and both phases read the same
    rows; Spark's ContextCleaner frees its blocks with the result),
 2. count rows per partition (tiny driver-side list, one long per partition),
-3. ``mapInPandas`` adds ``cumulative_offset[pid] + local position``.
+3. a JVM projection adds ``cumulative_offset[pid] + local position``: the
+   offset comes from a literal map keyed by partition id, the position from
+   the low 33 bits of ``monotonically_increasing_id()`` (the row's index
+   within its partition, per that function's documented bit layout).
 
-Everything stays Arrow-batched; the only driver materialization is the
+The rows never cross into Python; the only driver materialization is the
 per-partition count vector.
 """
 
@@ -25,11 +28,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
+# monotonically_increasing_id() keeps the row's index within its partition
+# in the low 33 bits (the partition id is in the upper 31)
+_ROW_IN_PARTITION = (1 << 33) - 1
+
 
 def _range_sorted(df: DataFrame, key_cols: list[str], num_partitions: int | None) -> DataFrame:
     """``df`` range-partitioned and sorted by ``key_cols``, each row tagged
     with its partition id ``__pid``. Both functions below read it twice (a
-    per-partition aggregate, then the ``mapInPandas``), so they
+    per-partition aggregate, then the id or running-sum pass), so they
     local-checkpoint it."""
     parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     return (
@@ -53,32 +60,18 @@ def assign_ids(
         r["__pid"]: r["n"]
         for r in ordered.groupBy("__pid").agg(F.count("*").alias("n")).collect()
     }
-    starts: dict[int, int] = {}
+    starts = []
     acc = offset
     for pid in sorted(counts):
-        starts[pid] = acc
+        starts += [F.lit(pid), F.lit(acc).cast("long")]
         acc += counts[pid]
-
-    out_schema = StructType(
-        [StructField(id_col, LongType(), False)] + list(df.schema.fields)
+    row = F.monotonically_increasing_id().bitwiseAND(F.lit(_ROW_IN_PARTITION))
+    _id = (
+        F.element_at(F.create_map(*starts), F.col("__pid")) + row + 1
+        if starts
+        else F.lit(None).cast("long")  # no rows: no partition to look up
     )
-
-    def add_ids(batches):
-        import pandas as pd
-
-        pos = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if pos is None:
-                pos = starts[int(pdf["__pid"].iloc[0])]
-            ids = range(pos + 1, pos + 1 + len(pdf))
-            pos += len(pdf)
-            out = pdf.drop(columns=["__pid"])
-            out.insert(0, id_col, pd.Series(list(ids), index=out.index, dtype="int64"))
-            yield out
-
-    return ordered.mapInPandas(add_ids, schema=out_schema)
+    return ordered.select(_id.alias(id_col), "*").drop("__pid")
 
 
 def grouped_cumsum(

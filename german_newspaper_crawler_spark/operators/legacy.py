@@ -29,7 +29,6 @@ normalize(normalize(x)) == normalize(x) (property-tested).
 
 from __future__ import annotations
 
-import hashlib
 import json
 from datetime import datetime
 from typing import Iterator
@@ -42,6 +41,7 @@ from pyspark.sql.types import (
 )
 
 from german_newspaper_crawler_spark import schemas
+from german_newspaper_crawler_spark.functions.hashing import identity_hashes
 
 LEGACY_NORMALIZED = StructType(
     [
@@ -157,12 +157,8 @@ def normalize_record(data: dict) -> dict:
 
     text, html = data.get("text"), data.get("html")
     content_hash = data.get("content_hash")
-    if content_hash is None and isinstance(url, str) and url.startswith(("http://", "https://")):
-        content_hash = hashlib.sha256(url.encode("utf-8")).hexdigest()
-    elif content_hash is None:
-        payload = ((text or html) or "").strip()
-        if payload:
-            content_hash = hashlib.sha256(payload.encode("utf-8")).hexdigest()
+    if content_hash is None:
+        content_hash = identity_hashes(url, text, html)[0]
 
     return {
         "_id": existing_internal,

@@ -149,21 +149,6 @@ def robots_fetch_stage(
     return stale_hosts.select("host").mapInPandas(run, schema=schemas.ROBOTS)
 
 
-def _migrate_robots_schema(tbl: DataFrame) -> DataFrame:
-    """Forward-migrate a robots table written by an older revision (5-column
-    schema without ``status`` / ``allow_prefixes``): backfill defaults so a
-    resumed crawl refreshes the table instead of failing the first TTL
-    filter with a missing-column AnalysisException. Old rows backfill as
-    status=200 (they were successful parses) with no allow-overrides."""
-    if "status" not in tbl.columns:
-        tbl = tbl.withColumn("status", F.lit(200).cast("int"))
-    if "allow_prefixes" not in tbl.columns:
-        tbl = tbl.withColumn(
-            "allow_prefixes", F.expr("cast(array() as array<string>)")
-        )
-    return tbl
-
-
 def refresh_robots_df(
     spark: SparkSession,
     store: SnapshotStore,
@@ -184,11 +169,7 @@ def refresh_robots_df(
     * returned rules = table ``left_semi`` round hosts.
     """
     hosts = hosts.select("host").distinct()
-    tbl = (
-        _migrate_robots_schema(store.read(spark, "robots", schemas.ROBOTS))
-        if store.exists("robots")
-        else spark.createDataFrame([], schemas.ROBOTS)
-    )
+    tbl = store.read(spark, "robots", schemas.ROBOTS)
     ok_cut = now - timedelta(hours=ttl_hours)
     fail_cut = now - timedelta(hours=fail_ttl_hours)
     fresh = tbl.where(

@@ -37,6 +37,9 @@ from german_newspaper_crawler_spark import schemas
 from german_newspaper_crawler_spark.functions import hashing
 from german_newspaper_crawler_spark.functions.urls import href_valid, urljoin_udf
 from german_newspaper_crawler_spark.operators import frontier as FR
+from german_newspaper_crawler_spark.operators.enrichment import (
+    MAX_POS_TAG_ENTRIES, MAX_POS_TAG_TOKENS, enrich_stage,
+)
 from german_newspaper_crawler_spark.sources.fetch import Fetcher, fetch_stage
 from german_newspaper_crawler_spark.sources.store import SnapshotStore
 
@@ -48,8 +51,6 @@ from german_newspaper_crawler_spark.sources.store import SnapshotStore
 PHASH_MAX_HAMMING = 4
 # G2: a host's robots rules are re-fetched once they are this old
 ROBOTS_TTL_HOURS = 24
-# G1: target false-positive rate of the seen-set Bloom filters
-BLOOM_FPR = 0.01
 # after each compaction, expire unreferenced snapshot dirs beyond this
 # time-travel window (Iceberg expire_snapshots cadence)
 EXPIRE_KEEP_LAST = 20
@@ -81,9 +82,6 @@ class CrawlConfig:
     # remains the authority). Pays off when the seen set is huge relative to
     # the per-round batch (the 10^10 regime); off by default at fixture scale.
     use_bloom: bool = False
-    bloom_buckets: int = 16
-    pos_tag_cap: int = 50_000  # MAX_POS_TAG_ENTRIES (pos_tagging.py:13)
-    pos_tag_skip: int = 200_000  # MAX_POS_TAG_TOKENS (pos_tagging.py:14)
     # fold accumulated frontier merge-deltas back into one base file set
     # every N rounds (Iceberg rewrite_data_files cadence); keeps the
     # merge-on-read delta chain short without per-round full rewrites
@@ -194,8 +192,8 @@ _ARTICLE_SCHEMA = StructType(
         # (10-100 KB/row) and at 100 TB scale it must not stream uncompressed
         # through Arrow/shuffle/storage. Logical html = zlib.decompress
         # (utf-8). Identity hashes are computed python-side over the RAW
-        # strings (hashlib ≡ sha2, bit-identical), so the digests still match
-        # the reference exactly.
+        # strings (hashing.identity_hashes), so the digests still match the
+        # reference exactly.
         StructField("html_gz", BinaryType()),
         StructField("text", StringType()),
         StructField("figures", ArrayType(_FIG)),
@@ -223,27 +221,20 @@ def fetch_parse_articles_stage(
     bookkeeping; downstream filters status != -403 before upsert."""
 
     def to_rows(f: pd.DataFrame) -> list[tuple]:
-        import hashlib
         import zlib
 
         from german_newspaper_crawler_spark.parse.registry import parse_with_registry
-
-        def sha(s: str) -> str:
-            return hashlib.sha256(s.encode("utf-8")).hexdigest()
 
         rows = []
         for r in f.itertuples(index=False):
             html = r.html or ""
             d = parse_with_registry(r.domain, r.url, html)
             text = d["text"] or ""
-            # identity per §1.4 (object_model.py:195-214 +
-            # web_requests.py:159-175), python-side so raw html never
-            # crosses the Arrow boundary
-            is_http = r.url.startswith(("http://", "https://"))
-            url_hash = sha(r.url) if is_http else None
-            data = (text or html or "").strip()
-            text_hash = sha(data) if data else None
-            content_hash = url_hash if is_http else text_hash
+            # identity per §1.4, python-side so raw html never crosses the
+            # Arrow boundary
+            content_hash, url_hash, text_hash = hashing.identity_hashes(
+                r.url, text, html
+            )
             rows.append(
                 (
                     r.url, r.host, r.domain, r.base_url, r.priority, r.seq,
@@ -349,11 +340,16 @@ def fetch_images_stage(
 
 # --- enrichment (X4 whitespace-fallback tagger — pure SQL, no UDF) ------------
 
-def enrich_pos_tags(df: DataFrame, cfg: CrawlConfig) -> DataFrame:
+def enrich_pos_tags(
+    df: DataFrame,
+    cap: int = MAX_POS_TAG_ENTRIES,
+    skip_tokens: int = MAX_POS_TAG_TOKENS,
+) -> DataFrame:
     """pos_tag_object semantics (pos_tagging.py:169-227) with the spaCy-less
     whitespace fallback (pos_tagging.py:108-116): tokens (i, w, '', '', ''),
-    cap at MAX_POS_TAG_ENTRIES; skipped entirely (→ []) for binary urls, PDF
-    magic, empty text, or token estimate over MAX_POS_TAG_TOKENS."""
+    cap at ``cap``; skipped entirely (→ []) for binary urls, PDF magic, empty
+    text, or token estimate over ``skip_tokens``. Same arguments as
+    :func:`operators.enrichment.enrich_stage`."""
     from german_newspaper_crawler_spark.functions.text import token_count_estimate
     from german_newspaper_crawler_spark.functions.urls import is_binary_url
 
@@ -367,11 +363,11 @@ def enrich_pos_tags(df: DataFrame, cfg: CrawlConfig) -> DataFrame:
         is_binary_url("url")
         | pdf_like
         | (F.coalesce(F.col("text"), F.lit("")) == "")
-        | (est > cfg.pos_tag_skip)
+        | (est > skip_tokens)
     )
     tags = F.expr(
         f"""transform(
-              slice(split(trim(text), '\\\\s+'), 1, {cfg.pos_tag_cap}),
+              slice(split(trim(text), '\\\\s+'), 1, {cap}),
               (w, i) -> struct(cast(i as int) as tid, w as token,
                                '' as lemma, '' as tag, '' as pos))"""
     )
@@ -447,7 +443,6 @@ def skip_known_text(
     articles: DataFrame,
     seen: DataFrame,
     blooms: DataFrame | None = None,
-    n_bloom_buckets: int = 16,
     scope_col: str | None = None,
 ) -> DataFrame:
     """Post-fetch text-hash skip — the other half of the split (see
@@ -465,9 +460,7 @@ def skip_known_text(
         return _seen_join(articles, "text_content_hash", seen, "left_anti", scope_col)
     from german_newspaper_crawler_spark.operators.bloom import split_maybe_seen
 
-    fresh, maybe = split_maybe_seen(
-        articles, blooms, "text_content_hash", n_bloom_buckets
-    )
+    fresh, maybe = split_maybe_seen(articles, blooms, "text_content_hash")
     return fresh.unionByName(
         _seen_join(maybe, "text_content_hash", seen, "left_anti", scope_col)
     )
@@ -634,27 +627,16 @@ def run_crawl(
                 # persistent incremental maintenance: per-round cost ∝ new
                 # hashes (delta blobs OR-merge), full seen rescans only on
                 # amortized capacity doublings — never per round (G1)
-                blooms = ensure_blooms(
-                    spark, store, seen, n_buckets=cfg.bloom_buckets,
-                    fpr=BLOOM_FPR,
-                )
+                blooms = ensure_blooms(spark, store, seen)
             # robots-blocked rows were never fetched → no article row;
             # failures (status 0/4xx/5xx) DO upsert with empty html
             # (web_requests.py:129-150)
             fresh = skip_known_text(
                 parsed.where(F.col("status") != -403), seen,
-                blooms=blooms, n_bloom_buckets=cfg.bloom_buckets,
-                scope_col=scope,
+                blooms=blooms, scope_col=scope,
             )
             if cfg.tagger is not None:
-                from german_newspaper_crawler_spark.operators.enrichment import (
-                    enrich_stage,
-                )
-
-                enriched = enrich_stage(
-                    fresh, cfg.tagger, cap=cfg.pos_tag_cap,
-                    skip_tokens=cfg.pos_tag_skip,
-                )
+                enriched = enrich_stage(fresh, cfg.tagger)
                 # post-tag re-check (web_requests.py:205-211): a mutating
                 # tagger recomputes content_hash from the normalized text
                 enriched = _seen_join(enriched, "content_hash", seen, "left_anti", scope)
@@ -663,7 +645,7 @@ def run_crawl(
                 # (http rows, probed by prefilter_known_urls) or the text
                 # hash (other rows, probed by skip_known_text) against this
                 # same seen — a re-check here could drop nothing
-                enriched = enrich_pos_tags(fresh, cfg)
+                enriched = enrich_pos_tags(fresh)
             parsed_ts = cfg.parsed_ts or datetime.utcnow()
             from german_newspaper_crawler_spark.operators.ids import assign_ids
 
@@ -678,9 +660,7 @@ def run_crawl(
                 offset=id_highwater,
             )
             articles_out = final.select(
-                "_id", "url", "titel", "teaser", "autor", "category",
-                "published_date", "parsed_date", "html_gz", "text",
-                "ai_keywords", "pos_taggs", "content_hash", "domain",
+                *[f.name for f in schemas.ARTICLES.fields]
             ).cache()
             cached.append(articles_out)
             n_articles = articles_out.count()
@@ -700,10 +680,7 @@ def run_crawl(
                         update_blooms,
                     )
 
-                    update_blooms(
-                        spark, store, new_seen, n_buckets=cfg.bloom_buckets,
-                        fpr=BLOOM_FPR,
-                    )
+                    update_blooms(spark, store, new_seen)
             # 3) figures → image frontier rows (resolved against article url)
             if cfg.extract_images:
                 figs = (

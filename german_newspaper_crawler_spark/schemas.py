@@ -141,35 +141,3 @@ METRICS = StructType(
         StructField("wall_ms", LongType()),
     ]
 )
-
-# Fixture page store served by the injected fetcher (test seam — reference
-# injectable fetcher, lib/domain/taz.py:149-157,384-385).
-PAGES = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("kind", StringType()),  # listing | article | binary
-        StructField("html", StringType()),
-        StructField("status", IntegerType()),
-    ]
-)
-
-SEEDS = StructType(
-    [
-        StructField("domain", StringType(), False),
-        StructField("base_url", StringType(), False),
-        StructField("host", StringType(), False),
-        StructField("collection", StringType(), False),
-    ]
-)
-
-# Anchor rows produced by the listing-parse stage (P3 flatmap output;
-# reference collects (href, anchor_text) pairs, lib/domain/taz.py:188-206).
-ANCHORS = StructType(
-    [
-        StructField("page_url", StringType()),
-        StructField("href", StringType()),
-        StructField("anchor_text", StringType()),
-        StructField("sel_rank", IntegerType()),  # index of first matching selector
-        StructField("doc_pos", LongType()),  # position in document order
-    ]
-)

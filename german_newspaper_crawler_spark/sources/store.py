@@ -17,6 +17,10 @@ Appends add a snapshot dir to the live set; overwrites replace the live set;
 ``merge_delta`` adds a keyed delta dir that replaces same-key rows at read
 time (MERGE semantics without rewriting the table).
 
+Every commit to a table carries that table's one column set (the fixed
+schemas in ``schemas.py`` and the operators' output schemas), so reads
+neither merge parquet footers nor fill in missing columns.
+
 Consistency note: commits are atomic PER TABLE (like Iceberg without a
 multi-table transaction). The crawl loop orders its writes so a crash
 between tables is safe: articles MERGE first (idempotent on content_hash),
@@ -94,13 +98,7 @@ class SnapshotStore:
         def read_dirs(dirs: list[str]) -> DataFrame:
             paths = [os.path.join(tdir, d) for d in dirs]
             if not m.get("partition_spec"):
-                if len(paths) == 1:
-                    return spark.read.parquet(*paths)
-                # schema evolution across snapshots (Iceberg add-column
-                # analog): merge footers so an added column reads as null
-                # on old files instead of being dropped by the sampled
-                # schema; compaction folds back to the single-dir fast path
-                return spark.read.option("mergeSchema", "true").parquet(*paths)
+                return spark.read.parquet(*paths)
             # hive-partitioned snapshots: each snapshot dir is its own
             # partition root — read separately and union (Spark refuses
             # multi-root partition discovery); per-scan partition pruning
@@ -108,9 +106,7 @@ class SnapshotStore:
             out = None
             for p in paths:
                 part = spark.read.option("basePath", p).parquet(p)
-                out = part if out is None else out.unionByName(
-                    part, allowMissingColumns=True
-                )
+                out = part if out is None else out.unionByName(part)
             return out
 
         if not keys or not delta_dirs:
@@ -123,9 +119,7 @@ class SnapshotStore:
             part = spark.read.parquet(os.path.join(tdir, d)).withColumn(
                 "_snap_ord", F.lit(ord_)
             )
-            deltas = part if deltas is None else deltas.unionByName(
-                part, allowMissingColumns=True
-            )
+            deltas = part if deltas is None else deltas.unionByName(part)
         w = Window.partitionBy(*keys).orderBy(F.col("_snap_ord").desc())
         latest = (
             deltas.withColumn("_rn", F.row_number().over(w))
@@ -135,9 +129,7 @@ class SnapshotStore:
         if not base_dirs:
             return latest
         base = read_dirs(base_dirs)
-        return base.join(latest.select(*keys), keys, "left_anti").unionByName(
-            latest, allowMissingColumns=True
-        )
+        return base.join(latest.select(*keys), keys, "left_anti").unionByName(latest)
 
     def set_partition_spec(self, table: str, cols: list[str],
                            sort_cols: list[str] | None = None) -> None:

@@ -78,10 +78,9 @@ def test_persistent_incremental_blooms_equal_full_rebuild(spark, tmp_path):
     rebuild over the union produces (associativity), per-commit write volume
     is one blob row per touched bucket, and capacity overflow triggers an
     amortized rebuild with a larger m."""
-    from german_newspaper_crawler_spark.functions.hashing import hash64
     from german_newspaper_crawler_spark.operators.bloom import (
-        build_bloom, capacity_of, ensure_blooms, merge_bloom_tables,
-        params_for, update_blooms,
+        SEEN_BUCKETS, build_bloom, capacity_of, ensure_blooms,
+        merge_bloom_tables, params_for, seen_bucket, update_blooms,
     )
     from german_newspaper_crawler_spark.sources.store import SnapshotStore
     from pyspark.sql import functions as F
@@ -94,13 +93,13 @@ def test_persistent_incremental_blooms_equal_full_rebuild(spark, tmp_path):
 
     store = SnapshotStore(str(tmp_path / "b"))
     # base build over the first chunk (2x headroom sizing)
-    base = ensure_blooms(spark, store, hashes(0, 500), n_buckets=8, fpr=0.01)
+    base = ensure_blooms(spark, store, hashes(0, 500), fpr=0.01)
     assert base is not None
     m0 = store.read(spark, "blooms").select("m").first()["m"]
 
     # two incremental rounds
-    update_blooms(spark, store, hashes(500, 700), n_buckets=8)
-    update_blooms(spark, store, hashes(700, 800), n_buckets=8)
+    update_blooms(spark, store, hashes(500, 700))
+    update_blooms(spark, store, hashes(700, 800))
     merged = {
         r["bucket"]: (bytes(r["blob"]), r["n_items"])
         for r in merge_bloom_tables(store.read(spark, "blooms")).collect()
@@ -108,7 +107,7 @@ def test_persistent_incremental_blooms_equal_full_rebuild(spark, tmp_path):
 
     # full rebuild over the union with the SAME (m, k) must be bit-identical
     head = store.read(spark, "blooms").select("m", "k").first()
-    bucket = F.pmod(hash64("content_hash"), F.lit(8)).cast("int")
+    bucket = seen_bucket("content_hash")
     full = {
         r["bucket"]: (bytes(r["blob"]), r["n_items"])
         for r in build_bloom(
@@ -117,7 +116,8 @@ def test_persistent_incremental_blooms_equal_full_rebuild(spark, tmp_path):
     }
     assert merged == full
 
-    # delta commits wrote ∝ touched buckets (≤ 8 blob rows), never the base
+    # delta commits wrote ∝ touched buckets (≤ SEEN_BUCKETS blob rows), never
+    # the base
     m = store._read_manifest("blooms")
     delta_dirs = [s["dir"] for s in m["snapshots"] if s["op"] == "bloom-delta"]
     assert len(delta_dirs) == 2
@@ -125,12 +125,12 @@ def test_persistent_incremental_blooms_equal_full_rebuild(spark, tmp_path):
 
     for d in delta_dirs:
         n = spark.read.parquet(os.path.join(str(tmp_path / "b"), "blooms", d)).count()
-        assert n <= 8
+        assert n <= SEEN_BUCKETS
 
     # overflow the sized capacity → ensure_blooms rebuilds with larger m
     cap = capacity_of(int(m0), 0.01)
-    update_blooms(spark, store, hashes(800, 800 + cap), n_buckets=8)
-    ensure_blooms(spark, store, hashes(0, 800 + cap), n_buckets=8, fpr=0.01)
+    update_blooms(spark, store, hashes(800, 800 + cap))
+    ensure_blooms(spark, store, hashes(0, 800 + cap), fpr=0.01)
     ops = [s["op"] for s in store._read_manifest("blooms")["snapshots"]]
     assert ops.count("bloom-rebuild") >= 2  # initial + overflow rebuild
     assert store.read(spark, "blooms").select("m").first()["m"] > m0

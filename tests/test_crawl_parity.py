@@ -373,7 +373,7 @@ def test_full_feature_matrix_crawl_matches_plain(spark, tmp_path):
     full_store = SnapshotStore(str(tmp_path / "full"))
     cfg_full = CrawlConfig(
         n_buckets=8, max_rounds=2, parsed_ts=PARSED_TS,
-        use_robots_table=True, use_bloom=True, bloom_buckets=4,
+        use_robots_table=True, use_bloom=True,
         compact_every=1, tagger=WhitespaceTagger(), fetch_concurrency=4,
     )
     run_crawl(spark, full_store, seeds_df, table_fetcher(pages, blobs), cfg=cfg_full)

@@ -180,9 +180,7 @@ def test_model_loaded_once_per_worker_not_per_row(spark, tmp_path):
 def test_stage_matches_sql_fallback(spark):
     """enrich_stage(WhitespaceTagger) ≡ the JVM-side enrich_pos_tags SQL
     (the production default) on mixed gate-exercising rows."""
-    from german_newspaper_crawler_spark.plans.crawl import (
-        CrawlConfig, enrich_pos_tags,
-    )
+    from german_newspaper_crawler_spark.plans.crawl import enrich_pos_tags
 
     rows = [
         ("https://x.de/a", "kurzer deutscher text", False),
@@ -193,10 +191,9 @@ def test_stage_matches_sql_fallback(spark):
         ("https://x.de/f", "w " * 30, False),
     ]
     df = spark.createDataFrame(rows, ["url", "text", "is_pdf_like"])
-    cfg = CrawlConfig(pos_tag_cap=10, pos_tag_skip=25)
     sql_out = {
         r["url"]: [t.asDict() for t in r["pos_taggs"]]
-        for r in enrich_pos_tags(df, cfg).collect()
+        for r in enrich_pos_tags(df, cap=10, skip_tokens=25).collect()
     }
     stage_out = {
         r["url"]: [t.asDict() for t in r["pos_taggs"]]

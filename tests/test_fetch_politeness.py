@@ -137,13 +137,13 @@ def test_bloom_composes_with_strict_scope(spark):
         schemas.SEEN,
     )
     m, k = params_for(100, 0.01)
-    blooms = build_bloom(seen, "content_hash", seen_bucket("content_hash", 4), m, k)
+    blooms = build_bloom(seen, "content_hash", seen_bucket("content_hash"), m, k)
 
     def kept(**kw):
         return {r["url"] for r in skip_known_text(arts, seen, **kw).collect()}
 
     exact = kept(scope_col="domain")
-    accel = kept(blooms=blooms, n_bloom_buckets=4, scope_col="domain")
+    accel = kept(blooms=blooms, scope_col="domain")
     assert accel == exact
     # and the strict result differs from global (scope genuinely engaged)
     global_ = kept()

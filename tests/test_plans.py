@@ -169,3 +169,12 @@ def test_grouped_cumsum_equals_window(spark):
         for r in df.withColumn("cum", F.sum("v").over(w)).collect()
     }
     assert got == want
+
+
+def test_assign_ids_has_no_python_stage(spark):
+    """W1/A3 ids are a JVM projection over the checkpointed, range-sorted
+    rows: no article or event row crosses the Arrow boundary for them."""
+    import __spark_entry__ as e
+
+    plan = _plan_of(e.queries()["w1_a3_id_assignment"](spark, SF))
+    assert "MapInPandas" not in plan and "ArrowEvalPython" not in plan, plan

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import hashlib
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from german_newspaper_crawler_spark.functions.text import chunk_text_by_paragraphs
@@ -12,15 +12,54 @@ from german_newspaper_crawler_spark.functions.urls import _canonicalize_one
 from german_newspaper_crawler_spark.operators.bloom import params_for
 
 
-@given(st.text(min_size=0, max_size=200))
-@settings(max_examples=200, deadline=None)
-def test_python_side_identity_matches_reference_recipe(s):
-    """The python-side digest used in the fused stage is exactly the
-    reference's hashlib recipe for arbitrary unicode."""
-    assert (
-        hashlib.sha256(s.encode("utf-8")).hexdigest()
-        == hashlib.sha256(s.encode("utf-8")).hexdigest()
-    )
+# padding drawn from str.isspace() characters that Spark's space-only trim
+# keeps: the identity rule strips every one of them
+_PAD = st.text(alphabet=" \n\t\xa0\u3000\x1c", max_size=3)
+_PADDED = st.builds(lambda a, s, b: a + s + b, _PAD, st.text(max_size=12), _PAD)
+_IDENTITY_ROW = st.tuples(
+    st.one_of(
+        st.none(),
+        st.sampled_from(["http://x/a", "https://x/b", "ftp://x/c", "", "HTTP://x/d"]),
+        _PADDED,
+    ),
+    st.one_of(st.none(), _PADDED),
+    st.one_of(st.none(), _PADDED),
+)
+
+
+def _reference_identity(url, text, html):
+    """The reference recipe (object_model.py:195-214, web_requests.py:156-175):
+    sha256(url) for http(s) urls, else sha256 of the stripped text or html."""
+
+    def sha(s):
+        return hashlib.sha256(s.encode("utf-8")).hexdigest()
+
+    is_http = url is not None and url.startswith(("http://", "https://"))
+    url_hash = sha(url) if is_http else None
+    data = (text or html or "").strip()
+    text_hash = sha(data) if data else None
+    return (url_hash if is_http else text_hash, url_hash, text_hash)
+
+
+@given(st.lists(_IDENTITY_ROW, min_size=1, max_size=8))
+@example([("ftp://x/a", "\nabc\t", None), ("ftp://x/b", "", "<html>x</html>\n")])
+@settings(max_examples=25, deadline=None)
+def test_identity_hashes_match_reference_recipe(spark, rows):
+    """Both statements of the identity rule — the JVM columns of
+    ``hashing.content_hash`` / ``url_hash`` / ``text_hash`` and the Python
+    ``hashing.identity_hashes`` — give the reference recipe's digests, for
+    values padded with whitespace beyond the space character."""
+    from german_newspaper_crawler_spark.functions import hashing
+
+    got = spark.createDataFrame(rows, "url string, text string, html string").select(
+        hashing.content_hash("url", "text", "html"),
+        hashing.url_hash("url"),
+        hashing.text_hash("text", "html"),
+    ).collect()
+    for row, jvm in zip(rows, got):
+        want = _reference_identity(*row)
+        assert tuple(jvm) == want, row
+        assert hashing.identity_hashes(*row) == want, row
 
 
 @given(
